@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every registered query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line.
@@ -9,31 +8,30 @@ import org.apache.spark.sql.SparkSession
   * would let Catalyst prune all columns (and collapse projections under the
   * count), so it measures plan skeletons, not query cost (VERDICT r1 #2).
   * Failures are surfaced in an `errors` object instead of being folded into
-  * a fake timing. After the full pass the slowest `SPARK_GRAFT_RERUN`
+  * a fake timing; harness failures (warm-up, catalog registration, baseline
+  * read) under `harness_errors`, beside the `baseline_rows` the regression
+  * tripwire armed. After the full pass the slowest `SPARK_GRAFT_RERUN`
   * (default 8) queries are re-run back-to-back and recorded under
   * `isolated_rerun` — contention forensics baked into the artifact.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // parity with Sessions.local (r17): shuffle files free only when
-      // their RDDs are GC'd — over a 250-query pass dead shuffle state
-      // otherwise accumulates on the one local disk and the tail
-      // queries pay it; same config protects shuffle dirs on a cluster
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    // harness failures are recorded in both JSON lines, never swallowed:
+    // a failed warm-up or catalog registration shifts its cost into the
+    // first timed queries, so the artifact must say it happened
+    def message(e: Throwable): String =
+      Option(e.getMessage).getOrElse(e.getClass.getName)
+        .replaceAll("[\"\\\\\n\r\t]", " ").take(200)
+    val harnessErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def harness[T](step: String)(body: => T): Option[T] =
+      try Some(body) catch { case e: Throwable => harnessErrors(step) = message(e); None }
     // JVM/codegen warm-up outside the timed region: without this the first
     // query absorbs ~5-8 s of JIT + classloading and the per-query numbers
     // misattribute engine cost
-    try {
+    harness("warmup") {
       import org.apache.spark.sql.functions._
       spark.range(1000000).agg(sum(col("id"))).write.mode("overwrite").format("noop").save()
       graft.sources.Tables.lineitem(spark, sfDir).limit(1000)
@@ -46,14 +44,13 @@ object Bench {
         .select(explode(split(lower(col("skills")), ",")).as("sk"))
         .groupBy(col("sk")).count().orderBy(col("count").desc).limit(5)
         .write.mode("overwrite").format("noop").save()
-    } catch { case _: Throwable => () }
+    }
     // catalog DDL is deployment setup, not query cost: register the SQL
     // views once up front (memoized), as a real warehouse's CREATE TABLEs
     // would be — the SQL-surface queries then measure the query alone.
     // Independent try: a failure in the JIT warm-ups above must not skip
     // registration (aq04 would silently re-absorb it into its timing).
-    try graft.sources.Tables.registerAll(spark, sfDir)
-    catch { case _: Throwable => () }
+    harness("register_all")(graft.sources.Tables.registerAll(spark, sfDir))
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // SPARK_GRAFT_ONLY=q01,jq04 limits the run (dev iteration knob)
@@ -66,9 +63,7 @@ object Bench {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         timings(name) = (System.nanoTime() - t0) / 1e9
       } catch {
-        case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\n\r\t]", " ").take(200)
+        case e: Throwable => errors(name) = message(e)
       } finally {
         // per-query isolation: drop caches a query may have built so later
         // timings aren't cross-subsidized and memory doesn't creep
@@ -91,16 +86,16 @@ object Bench {
     // under "regressed_vs_baseline" with its baseline figure — so the
     // artifact itself says whether a delta is contention (isolated time
     // collapses) or real (stays slow), round over round.
-    val baseline: Map[String, Double] = {
+    // A missing or malformed file loads 0 rows — which turns the tripwire
+    // off, so `baseline_rows` in both JSON lines says how many it armed.
+    val baseline: Map[String, Double] = harness("baseline") {
       val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench_baseline.json")
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p)), "UTF-8")
-        val qblock = txt.split("\"queries\":\\{", 2).lift(1).map(_.takeWhile(_ != '}'))
-        qblock.map("\"([^\"]+)\":([0-9.]+)".r.findAllMatchIn(_)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap).getOrElse(Map.empty)
-      } catch { case _: Throwable => Map.empty }
-    }
+      val txt = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(p)), "UTF-8")
+      val qblock = txt.split("\"queries\":\\{", 2).lift(1).map(_.takeWhile(_ != '}'))
+      qblock.map("\"([^\"]+)\":([0-9.]+)".r.findAllMatchIn(_)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap).getOrElse(Map.empty)
+    }.getOrElse(Map.empty)
     def gate(name: String, t: Double): Boolean =
       baseline.get(name).exists(b => t > math.max(1.5 * b, b + 0.5))
     val regressedRaw = timings.filter { case (name, t) => gate(name, t) }
@@ -151,7 +146,7 @@ object Bench {
       case (n, t) if !measured(n) => t }.sum
     val measurementSec = total - engineSec
     val nMeas = timings.count { case (n, _) => measured(n) }
-    val subtotals = s""""engine_queries_sec":${"%.3f".format(engineSec)},"measurement_rows_sec":${"%.3f".format(measurementSec)},"n_engine":${timings.size - nMeas},"n_measurement":$nMeas"""
+    val subtotals = s""""engine_queries_sec":${"%.3f".format(engineSec)},"measurement_rows_sec":${"%.3f".format(measurementSec)},"n_engine":${timings.size - nMeas},"n_measurement":$nMeas,"harness_errors":${jstr(harnessErrors)},"baseline_rows":${baseline.size}"""
     val line = s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec",$subtotals,"queries":${jnum(timings)},"isolated_rerun":${jnum(isolated)},"regressed_vs_baseline":${jnum(regressed.map { case (k, _) => k -> baseline(k) })},"regressed_candidates":${jnum(regressedRaw.map { case (k, _) => k -> baseline(k) })},"errors":${jstr(errors)},"n_ok":${timings.size},"n_err":${errors.size},"sf":"$sfDir"}"""
     println(line)
     // the full line above is ~7 KB at 237 queries and the driver's

@@ -1,31 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{EqualTo, If, IsNull, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.DoubleType
 
-/** Optimizer rule: graft_cosine(x, x) → 1.0, null/zero-vector preserving.
+/** Optimizer rule: graft_cosine(x, x) → [[SelfCosine]](x).
   *
   * Demonstrates the engine's Rule[LogicalPlan] injection path (SURVEY §7
   * "custom Catalyst work"): a self-similarity call — which shows up when
   * generated pipelines join a table to itself — collapses from a fused
-  * three-accumulator loop to a single-accumulator zero-norm probe.
+  * three-accumulator loop to a single-accumulator one.
   *
-  * A pure optimization, not a semantics change: null input still yields
-  * null, and a zero vector still yields NaN (0/0), exactly as the
-  * unrewritten expression would — the rewrite keeps a cheap VectorNormSq
-  * guard instead of assuming non-zero inputs. Only fires on
-  * semantically-equal deterministic children (canonicalized).
+  * A pure optimization, not a semantics change: [[SelfCosine]] computes
+  * the unrewritten expression's exact arithmetic, so null, zero-vector,
+  * NaN/infinite and extreme-norm inputs answer bit for bit as before.
+  * Every graft session runs this rule (graft.Sessions injects the
+  * extensions). Only fires on semantically-equal deterministic children
+  * (canonicalized).
   */
 object CosineSelfSimilarityRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
       case CosineSimilarity(a, b) if a.canonicalized == b.canonicalized &&
           a.deterministic =>
-        If(IsNull(a), Literal(null, DoubleType),
-          If(EqualTo(VectorNormSq(a), Literal(0.0, DoubleType)),
-            Literal(Double.NaN, DoubleType),
-            Literal(1.0, DoubleType)))
+        SelfCosine(a)
     }
 }

@@ -93,16 +93,20 @@ object CosineSimilarity {
       CosineSimilarity(GraftBridge.expression(a), GraftBridge.expression(b)))
 }
 
-/** Squared L2 norm of a double array — the cheap (single-accumulator)
-  * zero-vector probe CosineSelfSimilarityRule uses to keep its
-  * graft_cosine(x, x) → 1.0 rewrite semantics-preserving (a zero vector
-  * must still yield NaN, exactly as the unrewritten expression would). */
-case class VectorNormSq(child: Expression)
+/** graft_cosine(x, x) with ONE accumulator — what
+  * CosineSelfSimilarityRule rewrites a self-similarity call to. With
+  * both arguments equal, [[CosineSimilarity]]'s three accumulators hold
+  * the same sum `s` bit for bit, so `s / sqrt(s * s)` is its exact
+  * result for every input: 1.0 for ordinary vectors, NaN for a zero
+  * vector or a NaN/infinite element, and whatever overflow or underflow
+  * of `s * s` gives for extreme norms — never a value the two-argument
+  * form would not produce. */
+case class SelfCosine(child: Expression)
     extends UnaryExpression with Serializable {
 
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_norm_sq"
+  override def prettyName: String = "graft_self_cosine"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
@@ -119,7 +123,7 @@ case class VectorNormSq(child: Expression)
       s += xi * xi
       i += 1
     }
-    s
+    s / math.sqrt(s * s)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -133,10 +137,10 @@ case class VectorNormSq(child: Expression)
          |  double $xi = $a.getDouble($i);
          |  $s += $xi * $xi;
          |}
-         |${ev.value} = $s;
+         |${ev.value} = $s / java.lang.Math.sqrt($s * $s);
        """.stripMargin
     })
 
-  override protected def withNewChildInternal(newChild: Expression): VectorNormSq =
+  override protected def withNewChildInternal(newChild: Expression): SelfCosine =
     copy(child = newChild)
 }

@@ -5,9 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions injection point for the engine's native
-  * expressions — enable with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * or call [[GraftExtensions.registerAll]] on an existing session.
+  * expressions — every graft.Sessions session enables it with
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`;
+  * for a session built elsewhere, [[GraftExtensions.registerAll]]
+  * registers the functions (not the rule or strategy).
   * After registration the functions are first-class in SQL text:
   * `SELECT graft_cosine(a.embedding, b.embedding) ...`.
   */

@@ -26,7 +26,7 @@ object GraftStrategies extends SparkStrategy {
 object AsOfJoinPhysical {
 
   /** Register the strategy on the session if absent (self-contained so
-    * Verify/Bench sessions need no extensions config). */
+    * sessions built outside graft.Sessions need no extensions config). */
   def ensureStrategy(spark: SparkSession): Unit = {
     val exp = GraftBridge.experimental(spark)
     if (!exp.extraStrategies.contains(GraftStrategies))

@@ -1424,8 +1424,8 @@ object SimilarityQueries {
     * instead of the fixed-width arm's constant ~0.5 (the r12 audit's
     * flagged weak spot — sq02c's 4-bit arm measured 32.6 at the 100×
     * probe because its candidate set was half the corpus at any n).
-    * [[graft.LshAdaptiveProbe]] measures the adaptive arm's fraction
-    * 1×→100×. */
+    * COVERAGE.md "sq02d_lsh_adaptive" records the adaptive arm's
+    * measured fraction 1×→100×. */
   val sq02dAnnLshAdaptive: QueryDef = sqlChecked(
     "sq02d_lsh_adaptive",
     """WITH base AS (

@@ -132,8 +132,8 @@ object KnnGraph {
     * round built. This is the r14 scale finding made callable: a FIXED
     * round count is an n-dependent knob wearing a constant's clothes —
     * rounds that saturate a 2k fixture leave a 200k corpus at a
-    * fraction of its reachable recall (ComposedStoreProbe's depth
-    * arms: recall ~doubles per round at 200k, rounds 2/4/6 →
+    * fraction of its reachable recall (COVERAGE.md "The deep arms":
+    * recall ~doubles per round at 200k, rounds 2/4/6 →
     * 0.016/0.055/0.125), and NN-Descent's convergence horizon is
     * ~log n on structure-free data. The change fraction is the paper's
     * own monotone-progress measure; each check costs one index-sized
@@ -147,7 +147,7 @@ object KnnGraph {
     * with one bounded count per round — the round itself (a
     * k²-candidate shuffle + index-sized write) dwarfs the check.
     *
-    * CAVEAT (measured, ComposedStoreProbe's converged arm): this
+    * CAVEAT (measured, COVERAGE.md "The converged arm"): this
     * targets the kNN graph's OWN fixpoint — the right goal for the
     * exact-graph consumers (refine seeds, dedup, sq22-style serving).
     * The α-PRUNED serving artifact is different: at a fixed degree/L
@@ -1565,33 +1565,17 @@ object KnnGraph {
   private[graft] def bucketOf(id: Long, nb: Int): Int =
     Math.floorMod(id, nb.toLong).toInt
 
-  /** JVM-wide parquet schema cache for the store readers, keyed by
-    * path and stamped with the store's top-level listing (entry
-    * name:length:mtime — a rewrite or append mints or touches files, so
-    * content churn re-stamps; dynamic-overwrite bucket rewrites touch
-    * their bucket dirs). An unpinned `spark.read.parquet` runs a
-    * footer-inference JOB per read — ~80 of them in one sq28 pass, each
-    * a plan+job+gap round-trip for metadata the writer already knows
-    * (r17 event logs; guide §1.5/§6). On a stamp hit the cached schema
-    * pins the read (`spark.read.schema(...)`) and no inference job
-    * runs; a miss infers once and replaces the entry (bounded: one
-    * live entry per store path, the centroidsCache discipline). */
-  private val storeSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.types.StructType)]()
+  /** Store schemas, [[graft.util.Stamped]] by the store's top-level
+    * listing: a rewrite or append mints or touches files, and
+    * dynamic-overwrite bucket rewrites touch their bucket dirs. */
+  private val storeSchemas = new graft.util.Stamped[org.apache.spark.sql.types.StructType]
 
-  /** Read a store with its schema pinned from [[storeSchemaCache]] —
+  /** Read a store with its schema pinned from [[storeSchemas]] —
     * every repeated-read site (serve loops, maintenance rungs) routes
-    * through this instead of bare `spark.read.parquet`. */
+    * through this instead of bare `spark.read.parquet`, which runs a
+    * footer-inference job per read. */
   private[graft] def readStore(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp = fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString(",")
-    val schema = storeSchemaCache.compute(path, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(path).schema))._2
+    val schema = storeSchemas(spark, path)(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 
@@ -1890,36 +1874,20 @@ object KnnGraph {
     (array_position(d, array_min(d)) - 1).cast("int")
   }
 
-  /** JVM-wide centroid sidecar cache keyed BY PATH, each entry stamped
-    * with the sidecar's part-file listing (names + lengths — every
-    * write mints fresh UUID-named parts, so a same-path rewrite can
-    * never serve stale centroids) — a serving process holds its index
-    * metadata in memory rather than re-running a collect job per
-    * request batch (r17: one sq28 pass makes ~10 centroidsOf calls
-    * against the same store; each was a full plan+job round-trip for
-    * an 8 KB read). Keying by path alone means a rewrite REPLACES the
-    * entry instead of stranding the predecessor forever (r17 advice:
-    * the (path, stamp)-keyed map grew one dead entry per sidecar
-    * rewrite in a long-lived serving JVM). Values are cells×dim
-    * doubles — KBs, one live entry per store path. */
-  private val centroidsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[Seq[Double]])]()
+  /** Centroid sidecars, [[graft.util.Stamped]] — cells×dim doubles,
+    * KBs per store. */
+  private val centroidsCache = new graft.util.Stamped[Seq[Seq[Double]]]
 
-  /** The centroids a [[writeStoreClustered]] store was routed by. */
+  /** The centroids a [[writeStoreClustered]] store was routed by. A
+    * missing sidecar stays the filesystem's loud not-found error. */
   def centroidsOf(spark: SparkSession, path: String): Seq[Seq[Double]] = {
     import spark.implicits._
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_graft_centroids")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // missing sidecar must stay a loud error, same as the uncached read
-    val stamp = fs.listStatus(dir)
-      .map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(",")
-    centroidsCache.compute(dir.toString, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read
-        .schema("cid INT, centroid ARRAY<DOUBLE>")
-        .parquet(s"$path/_graft_centroids")
-        .orderBy($"cid").select($"centroid")
-        .as[Seq[Double]].collect().toSeq))._2
+    val dir = s"$path/_graft_centroids"
+    centroidsCache(spark, dir)(spark.read
+      .schema("cid INT, centroid ARRAY<DOUBLE>")
+      .parquet(dir)
+      .orderBy($"cid").select($"centroid")
+      .as[Seq[Double]].collect().toSeq)
   }
 
   /** Erase victim nodes from a CLUSTERED adjacency store — the
@@ -2032,7 +2000,7 @@ object KnnGraph {
   }
 
   /** Store-only beam serving over the CLUSTERED layout — the same
-    * walk as [[serveFromStores]] (one skeleton, [[beamTrace]]) with
+    * walk as [[serveFromStores]] (one head, [[exactServeHead]]) with
     * bucket-carrying frontiers; answers are IDENTICAL, the scan per
     * round shrinks from `min(|frontier|, N)` hash buckets to the
     * frontier's cluster footprint (StoredClusteredSpec asserts both).
@@ -2043,40 +2011,10 @@ object KnnGraph {
       entryVecs: DataFrame, beamWidth: Int = 0): DataFrame = {
     import spark.implicits._
     val cents = centroidsOf(spark, graphPath)
-    serveClusteredFrom(spark, graphPath, vecPath, queries, k, beamRounds,
-      entryVecs.select($"qid", $"node", clusterOf($"v", cents).as("node_bucket")),
-      beamWidth)
-  }
-
-  /** The clustered walk with EXPLICIT (qid, node, node_bucket) entries
-    * — what [[storedEntries]] feeds. `beamWidth` is the exact walk's
-    * search-list L (see [[serveFromStores]]); 0 = k. */
-  private def serveClusteredFrom(spark: SparkSession, graphPath: String,
-      vecPath: String, queries: DataFrame, k: Int, beamRounds: Int,
-      entries: DataFrame, beamWidth: Int = 0): DataFrame = {
-    import spark.implicits._
-    val l = if (beamWidth > 0) beamWidth else k
-    // stores are immutable within a serve: resolve each relation ONCE
-    // per request batch and run every round's expansion/fetch from it
     val adjRel = readStore(spark, graphPath)
-    val vecRel = readStore(spark, vecPath)
-    val vecNb = bucketsOf(spark, vecPath)
-    def scoreKeep(cand: DataFrame, keep: Int) = cand
-      .join(broadcast(queries), Seq("qid"))
-      .join(fetchVectorsFrom(vecRel, vecNb, cand)
-        .select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= keep)
-      .select($"qid", $"node", $"node_bucket")
-    val pool = beamTrace(entries,
-      expandClusteredFrom(adjRel, _),
-      fresh => scoreKeep(fresh.localCheckpoint(true), l),
-      beamRounds).last._2
-    // lazy pool union of checkpointed frontiers: cheaper to evaluate
-    // twice than to checkpoint once (see pqServeHead's shortlist)
-    scoreKeep(pool.filter($"node" =!= $"qid"), k)
-      .select($"qid", $"node")
+    exactServeHead(spark, vecPath, queries, k, beamRounds,
+      Some(entryVecs.select($"qid", $"node", clusterOf($"v", cents).as("node_bucket"))),
+      expandClusteredFrom(adjRel, _), carry = Seq("node_bucket"), beamWidth)
   }
 
   /** Persist per-cell ENTRY POINTS next to a clustered store: for each
@@ -2200,9 +2138,8 @@ object KnnGraph {
     // the present-cell set and the entry rows derive from it, where a
     // separate distinct-collect plus a scan-backed broadcast paid two
     // plan+job round-trips per serve (r17). r18: the collected rows
-    // are held in the JVM entry cache (the centroidsCache discipline —
-    // path-keyed, part-listing-stamped, one live entry per store), so
-    // a warm serve pays NO job here at all: the frame below is a local
+    // are held in the JVM entry cache ([[graft.util.Stamped]]), so a
+    // warm serve pays NO job here at all: the frame below is a local
     // dataset, and its broadcast builds collect-job-free.
     val entryRows = clusteredEntriesOf(spark, path)
     val entries = spark.createDataset(entryRows.toSeq)
@@ -2231,32 +2168,20 @@ object KnnGraph {
         .distinct()
   }
 
-  /** JVM-wide `_graft_entries` sidecar cache for the CLUSTERED layout
-    * (cid, node, node_bucket rows) — path-keyed, part-listing-stamped
-    * (every sidecar swap mints fresh UUID-named parts, so an erase,
-    * append, or refresh re-stamps and replaces the entry; one live
-    * entry per store, the centroidsCache discipline). A serving
-    * process holds its index metadata in memory; values are ≤
-    * cells·slots small rows. */
-  private val clusteredEntriesCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Array[(Int, Long, Int)])]()
+  /** `_graft_entries` sidecars of the CLUSTERED layout (cid, node,
+    * node_bucket rows), [[graft.util.Stamped]] — ≤ cells·slots rows. */
+  private val clusteredEntriesCache = new graft.util.Stamped[Array[(Int, Long, Int)]]
 
   private def clusteredEntriesOf(spark: SparkSession,
       path: String): Array[(Int, Long, Int)] = {
     import spark.implicits._
-    val dir = new org.apache.hadoop.fs.Path(path, "_graft_entries")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a missing sidecar stays a loud error, as the uncached read was
-    require(fs.exists(dir),
-      s"$path has no _graft_entries sidecar — rerun writeEntries")
-    val stamp = fs.listStatus(dir)
-      .map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(",")
-    clusteredEntriesCache.compute(dir.toString, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(dir.toString)
+    val dir = s"$path/_graft_entries"
+    clusteredEntriesCache(spark, dir,
+        missing = Some(s"$path has no _graft_entries sidecar — rerun writeEntries")) {
+      spark.read.parquet(dir)
         .select($"cid", $"node", $"node_bucket")
-        .as[(Int, Long, Int)].collect()))._2
+        .as[(Int, Long, Int)].collect()
+    }
   }
 
   /** IVF-style MULTI-PROBE routing: the indices (into `centroids`) of
@@ -2289,9 +2214,12 @@ object KnnGraph {
     * broadcast-sized sidecar. */
   def serveFromStoresClusteredWarm(spark: SparkSession, graphPath: String,
       vecPath: String, queries: DataFrame, k: Int,
-      beamRounds: Int, beamWidth: Int = 0, entryProbes: Int = 1): DataFrame =
-    serveClusteredFrom(spark, graphPath, vecPath, queries, k, beamRounds,
-      storedEntries(spark, graphPath, queries, entryProbes), beamWidth)
+      beamRounds: Int, beamWidth: Int = 0, entryProbes: Int = 1): DataFrame = {
+    val entries = storedEntries(spark, graphPath, queries, entryProbes)
+    val adjRel = readStore(spark, graphPath)
+    exactServeHead(spark, vecPath, queries, k, beamRounds, Some(entries),
+      expandClusteredFrom(adjRel, _), carry = Seq("node_bucket"), beamWidth)
+  }
 
   /** One frontier expansion from the stored adjacency: reads ONLY the
     * frontier nodes' buckets (≤ NumBuckets values, driver-bounded) and
@@ -2407,8 +2335,8 @@ object KnnGraph {
   /** ROW-count bucket sizing — nb ≈ n / targetRowsPerBucket, clamped
     * to [1, maxBuckets]. KEPT for callers that know their row width is
     * ~constant, but ROWS IS THE WRONG UNIT in general: the r13 probe
-    * sweeps (GraphEraseProbe/GraphServeProbe U-curves) measured that
-    * the governing constraint is BYTES per bucket — past the point
+    * sweeps (COVERAGE.md "Graph-erase scaling probe, round 13")
+    * measured that the governing constraint is BYTES per bucket — past the point
     * where a bucket amortizes its own listing/file overhead, more
     * buckets only multiply metadata cost (erase wall 5.4→34.8 s as nb
     * grew 32→3125 on KB-sized buckets; serve ms/q 3–4× worse), and a
@@ -2549,8 +2477,9 @@ object KnnGraph {
     * size, clamped to [minCells, maxCells] (tiny fixtures need a floor
     * for the layout to mean anything; the cap bounds the broadcast
     * centroid list, the codebook-training cost, and [[clusterOf]]'s
-    * per-row argmin width). ComposedStoreProbe measures the composed
-    * store under this policy at x1 (44 cells) and x100 (256). */
+    * per-row argmin width). COVERAGE.md "Composed-store lifecycle at
+    * 100×" records the composed store under this policy at x1 (44
+    * cells) and x100 (256). */
   def scaledCells(n: Long, minCells: Int = 16, maxCells: Int = 256): Int = {
     require(minCells > 0 && maxCells >= minCells, "bad cell clamp")
     math.min(maxCells, math.max(minCells, math.sqrt(n.toDouble).toInt))
@@ -2641,31 +2570,23 @@ object KnnGraph {
   def hashEntries(spark: SparkSession,
       path: String): Seq[(Long, Array[Double])] = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_entries")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"$path has no _graft_entries sidecar — rerun writeHashEntries " +
-        "(stores written by writeVectors carry it automatically)")
-    // JVM sidecar cache, the centroidsCache discipline (path-keyed,
-    // part-listing-stamped, one live entry per store): a warm serve's
-    // entry resolution then costs no job. Callers never mutate the
-    // returned arrays (score-and-pick only).
-    val stamp = fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(",")
-    val rows = hashEntriesCache.compute(p.toString, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(p.toString)
+    val dir = s"$path/_graft_entries"
+    // callers never mutate the returned arrays (score-and-pick only)
+    val rows = hashEntriesCache(spark, dir,
+        missing = Some(s"$path has no _graft_entries sidecar — rerun writeHashEntries " +
+          "(stores written by writeVectors carry it automatically)")) {
+      spark.read.parquet(dir)
         .select($"node", $"v").as[(Long, Seq[Double])]
-        .collect().map { case (id, v) => id -> v.toArray }.toSeq))._2
+        .collect().map { case (id, v) => id -> v.toArray }.toSeq
+    }
     require(rows.nonEmpty,
       s"$path/_graft_entries is empty — rerun writeHashEntries")
     rows
   }
 
-  /** See [[hashEntries]] — values are ≤ slots (id, vector) pairs. */
-  private val hashEntriesCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Seq[(Long, Array[Double])])]()
+  /** See [[hashEntries]] — [[graft.util.Stamped]], ≤ slots (id, vector)
+    * pairs per store. */
+  private val hashEntriesCache = new graft.util.Stamped[Seq[(Long, Array[Double])]]
 
   /** Sidecar warm entries for the DISTRIBUTED heads — the
     * [[serveCoordinated]] default's one-broadcast-join twin: each query
@@ -2744,6 +2665,22 @@ object KnnGraph {
   def serveFromStores(spark: SparkSession, graphPath: String,
       vecPath: String, queries: DataFrame, k: Int, beamRounds: Int,
       entries: Option[DataFrame] = None, beamWidth: Int = 0): DataFrame = {
+    val adjRel = readStore(spark, graphPath)
+    val adjNb = bucketsOf(spark, graphPath)
+    exactServeHead(spark, vecPath, queries, k, beamRounds, entries,
+      expandStoredFrom(adjRel, adjNb, _), carry = Nil, beamWidth)
+  }
+
+  /** THE exact serving walk both store layouts share — [[beamTrace]]'s
+    * skeleton with the full-precision scorer ([[serveFromStores]] on
+    * the hash layout; [[serveFromStoresClustered]] and its warm twin on
+    * the clustered one, which carries `node_bucket` through `carry`,
+    * the split [[pqServeHead]] uses). Entries default to
+    * [[ringEntries]] over the vector store. */
+  private def exactServeHead(spark: SparkSession, vecPath: String,
+      queries: DataFrame, k: Int, beamRounds: Int, entries: Option[DataFrame],
+      expand: DataFrame => DataFrame, carry: Seq[String],
+      beamWidth: Int): DataFrame = {
     import spark.implicits._
     // beamWidth is DiskANN's search-list L applied to the EXACT walk —
     // the per-round keep that sets the pool's ceiling (the quantized
@@ -2752,21 +2689,20 @@ object KnnGraph {
     // answer is always top-k regardless of L.
     val l = if (beamWidth > 0) beamWidth else k
     // one relation resolution per request batch (stores are immutable
-    // within a serve), shared by every round's expansion and fetch
-    val adjRel = readStore(spark, graphPath)
-    val adjNb = bucketsOf(spark, graphPath)
+    // within a serve), shared by every round's fetch
     val vecRel = readStore(spark, vecPath)
     val vecNb = bucketsOf(spark, vecPath)
+    val keepCols = (Seq("qid", "node") ++ carry).map(col)
     def scoreKeep(cand: DataFrame, keep: Int) = cand
       .join(broadcast(queries), Seq("qid"))
       .join(fetchVectorsFrom(vecRel, vecNb, cand)
         .select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= keep).select($"qid", $"node")
+      .filter($"rn" <= keep).select(keepCols: _*)
     val pool = beamTrace(
       entries.getOrElse(ringEntries(vecRel, queries)),
-      expandStoredFrom(adjRel, adjNb, _),
+      expand,
       // checkpoint the candidate set ONCE: scoreKeep evaluates its
       // input twice (the driver-side id collect for the pruned fetch,
       // then the scoring join) — without this the pruned store scan
@@ -2775,7 +2711,7 @@ object KnnGraph {
       beamRounds).last._2
     // lazy pool union of checkpointed frontiers: cheaper to evaluate
     // twice than to checkpoint once (see pqServeHead's shortlist)
-    scoreKeep(pool.filter($"node" =!= $"qid"), k)
+    scoreKeep(pool.filter($"node" =!= $"qid"), k).select($"qid", $"node")
   }
 
   /** Persist flat-PQ CODES bucket-partitioned by `vec_id` — the
@@ -3007,8 +2943,8 @@ object KnnGraph {
     * asserts equality). For |Q| in the thousands the per-round state
     * outgrows a coordinator — use [[serveFromStores]] there; the
     * boundedness contract HERE is the request batch. MEASURED
-    * ([[graft.GraphServeProbe]], same stores, answers equal): on the
-    * 100× corpus this head reads 270/38/50 ms-per-query at
+    * (COVERAGE.md "Serving-head crossover probe", same stores,
+    * answers equal): on the 100× corpus this head reads 270/38/50 ms-per-query at
     * |Q|=16/128/1024 vs the distributed loop's 334/61/23 — the wall
     * crossover sits between 128 and 1024 queries, where the per-round
     * `isin` candidate filters and driver collects outgrow the

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the star-schema + document/embedding corpus (TESTDATA.md).
   *
@@ -14,29 +15,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** JVM-wide schema cache for the fixture tables, keyed by path and
-    * stamped with the path's (length, mtime) status — an unpinned
+  /** Fixture-table schemas, [[graft.util.Stamped]]: an unpinned
     * `spark.read.parquet` re-infers the schema from a footer on EVERY
-    * load, one job + driver gap per table access per query (~13 such
-    * jobs in one sq22b pass alone, r18 event logs; guide §1.5/§6). On a
-    * stamp hit the read is schema-pinned and no inference job runs; a
-    * regenerated fixture re-stamps and replaces its entry (one live
-    * entry per table path). The pinned schema IS the file's own, so
+    * load (~13 such jobs in one sq22b pass, r18 event logs); a stamp hit
+    * pins the read instead. The pinned schema IS the file's own, so
     * column pruning, predicate pushdown, and the events-table type
     * dispatch behave identically. */
-  private val tableSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.types.StructType)]()
+  private val tableSchemas = new graft.util.Stamped[StructType]
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val stamp = s"${st.getLen}:${st.getModificationTime}"
-    val schema = tableSchemaCache.compute(path, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(path).schema))._2
+    val schema = tableSchemas(spark, path)(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

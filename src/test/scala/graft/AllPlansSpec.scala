@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Blanket physical-plan invariant over EVERY registered query: nothing
@@ -21,6 +21,19 @@ class AllPlansSpec extends AnyFunSuite {
 
   private val allowCartesian: Set[String] = Set.empty
 
+  /** Every registered query built ONCE, shared by both tests: building
+    * is the expensive part (some queries run jobs while constructing),
+    * and each test only reads a different view of the same plan. Each
+    * plan is fixed right after its build: a later query may unpersist a
+    * frame this one caches, and a plan made after that would expand the
+    * cached lineage it never re-executes. */
+  private lazy val plans: Seq[(String, QueryExecution)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe = fn(spark, dir).queryExecution
+      qe.executedPlan
+      name -> qe
+    }
+
   /** A frame consumed N times re-executes N times (no cross-branch CSE),
     * so runaway scan counts are the recompute-explosion smell. Current
     * legitimate maximum is sq02's 12 LSH hash tables; anything above
@@ -33,10 +46,9 @@ class AllPlansSpec extends AnyFunSuite {
 
   test("no registered query plans a CartesianProduct or a scan explosion") {
     val scanNode = "\\(\\d+\\) Scan parquet".r
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
+    val offenders = plans.flatMap {
+      case (name, qe) =>
+        val plan = qe.explainString(ExplainMode.fromString("formatted"))
         val cartesian = !allowCartesian(name) && plan.contains("CartesianProduct")
         val scans = scanNode.findAllIn(plan).size
         val explosion = !allowManyScans(name) && scans > maxScans
@@ -75,9 +87,9 @@ class AllPlansSpec extends AnyFunSuite {
 
   test("no registered query plans an unpartitioned Window over data-sized input") {
     import org.apache.spark.sql.execution.window.WindowExec
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) if !allowGlobalWindow(name) =>
-        val plan = fn(spark, dir).queryExecution.sparkPlan
+    val offenders = plans.flatMap {
+      case (name, qe) if !allowGlobalWindow(name) =>
+        val plan = qe.sparkPlan
         val global = plan.collect {
           case w: WindowExec if w.partitionSpec.isEmpty => w
         }
