@@ -3,8 +3,10 @@ package graft.queries
 import graft.QueryDef
 import graft.QueryDef.{rowsOnly, sqlChecked}
 import graft.similarity.VectorOps._
+import graft.similarity.{KnnGraph, TopK}
 import graft.sources.Tables
 import graft.util.Num._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -77,29 +79,15 @@ object SimilarityQueries {
       .select($"vec_id".as("qid"), $"tbl", $"bits")
     // union of per-table bucket collisions, deduped on the id pair alone
     val candidates = q
-      .join(emb.select($"vec_id".as("cid"), $"tbl", $"bits"), Seq("tbl", "bits"))
-      .filter($"qid" =!= $"cid")
-      .select($"qid", $"cid").distinct()
+      .join(emb.select($"vec_id".as("node"), $"tbl", $"bits"), Seq("tbl", "bits"))
+      .filter($"qid" =!= $"node")
+      .select($"qid", $"node").distinct()
     // rerank gather: broadcast the 20 query vectors, equi-join corpus
-    // vectors back on cid (the standard ANN rerank shape)
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = candidates
-      .join(broadcast(emb0.filter($"vec_id" < 20)
-        .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    // vectors back on node (the standard ANN rerank shape)
+    val qs = emb0.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v")
+    val ann = TopK.exact(candidates, broadcast(qs), emb0, 5)
     // baseline: exact top-5 for the same queries (unexploded frames)
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val bf = TopK.truth(qs, emb0, 5)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     val annCounts = ann.groupBy($"qid").agg(count(lit(1)).as("n_ann"))
     bf.groupBy($"qid").agg(count(lit(1)).as("n_bf"))
@@ -167,6 +155,9 @@ object SimilarityQueries {
       .withColumn("prank", row_number().over(wProbe))
       .filter($"prank" <= 4)
       .select($"qid", $"qv", $"list_id")
+    // both vectors ride the probe and list joins, so this rerank keeps
+    // its own window: TopK.exact would re-fetch them (two more
+    // broadcast jobs)
     val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
     val ann = probes
       .join(assigned.select($"vec_id".as("cid"), $"v".as("cv"), $"list_id"), Seq("list_id"))
@@ -175,14 +166,8 @@ object SimilarityQueries {
       .withColumn("rank", row_number().over(wAnn))
       .filter($"rank" <= 5)
       .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val bf = TopK.truth(
+      emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v"), emb, 5)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     bf.groupBy($"qid").agg(count(lit(1)).as("n_bf"))
       .join(hits, Seq("qid"), "left")
@@ -324,57 +309,23 @@ object SimilarityQueries {
     val cb: Seq[Seq[Seq[Double]]] = graft.similarity.Pq
       .trainSubspaces(sample, M, sub, K)
     // encode: nearest centroid per subspace as PURE column expressions
-    // over the codebook literal — distances via transform/zip_with,
-    // argmin via array_position(d, array_min(d)); fully codegen, no UDFs.
-    // The distance array materializes ONCE per subspace in its own
-    // projection — inlining it into both array_position and array_min
-    // would double the K×subdim arithmetic per corpus row
-    def subDist(vCol: org.apache.spark.sql.Column, m: Int) =
-      transform(typedlit(cb(m)), c =>
-        aggregate(zip_with(slice(vCol, m * sub + 1, sub), c,
-          (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
-    val codes = (0 until M).foldLeft(emb.toDF()) { (df, m) =>
-        df.withColumn(s"d$m", subDist($"v", m))
-          .withColumn(s"c$m",
-            (array_position(col(s"d$m"), array_min(col(s"d$m"))) - 1).cast("int"))
-          .drop(s"d$m")
-      }
-      .select(($"vec_id".as("cid") +: (0 until M).map(m => col(s"c$m"))): _*)
-    // queries precompute per-subspace LUTs of partial squared distances
-    val queries = (0 until M).foldLeft(
-      emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv"))) {
-      (df, m) =>
-        df.withColumn(s"lut$m",
-          transform(typedlit(cb(m)), c =>
-            aggregate(zip_with(slice($"qv", m * sub + 1, sub), c,
-              (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)))
-    }
+    // over the codebook literal (graft.similarity.Pq.pqEncode); queries
+    // precompute per-subspace LUTs of partial squared distances
+    val codes = graft.similarity.Pq.pqEncode(emb, cb, sub)
+      .withColumnRenamed("vec_id", "cid")
+    val qs = emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v")
+    val queries = graft.similarity.Pq.queryLuts(qs, cb, sub)
     // ADC: distance estimate = Σ_m lut_m[code_m] — lookups, no vectors
-    val adc = (0 until M).map(m =>
-      element_at(col(s"lut$m"), col(s"c$m") + 1)).reduce(_ + _)
     val wAdc = Window.partitionBy($"qid").orderBy($"adc".asc, $"cid")
-    val shortlist = broadcast(queries.drop("qv")).join(codes, $"qid" =!= $"cid")
-      .withColumn("adc", adc)
+    val shortlist = broadcast(queries).join(codes, $"qid" =!= $"cid")
+      .withColumn("adc", graft.similarity.Pq.adcCol(M))
       .withColumn("srank", row_number().over(wAdc))
       .filter($"srank" <= 50)
-      .select($"qid", $"cid")
+      .select($"qid", $"cid".as("node"))
     // exact rerank touches raw vectors ONLY for the 50-deep shortlist
-    val wRr = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = shortlist
-      .join(emb.select($"vec_id".as("qid"), $"v".as("qv")), Seq("qid"))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wRr))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val ann = TopK.exact(shortlist,
+      emb.select($"vec_id".as("qid"), $"v"), emb, 5)
+    val bf = TopK.truth(qs, emb, 5)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     bf.groupBy($"qid").agg(count(lit(1)).as("n_bf"))
       .join(hits, Seq("qid"), "left")
@@ -455,14 +406,8 @@ object SimilarityQueries {
       resSample.map(graft.similarity.Pq.rotateVec(_, rot)), M, sub, K)
     def sqd(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val bf = TopK.truth(
+        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v"), emb, 5)
       .cache()
     // one arm = sq10's full encode→probe→LUT→ADC→rerank pipeline under a
     // given (codebooks, optional rotation); both arms share bf
@@ -475,10 +420,6 @@ object SimilarityQueries {
       val codes = graft.similarity.Pq
         .ivfPqEncode(emb, coarse.map(_.toSeq).toSeq, cb, sub, rotOpt)
         .select(($"vec_id".as("cid") +: $"list_id" +: (0 until M).map(m => col(s"c$m"))): _*)
-      def subDist(vCol: org.apache.spark.sql.Column, m: Int) =
-        transform(typedlit(cb(m)), c =>
-          aggregate(zip_with(slice(vCol, m * sub + 1, sub), c,
-            (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
       // queries: NPROBE nearest lists, then one LUT per (query, list)
       // from the query residual w.r.t. that list's centroid — rotated
       // exactly like the stored residuals when the arm rotates
@@ -491,30 +432,19 @@ object SimilarityQueries {
         .withColumn("cdist", sqd($"qv", $"centroid"))
         .withColumn("prank", row_number().over(wProbe))
         .filter($"prank" <= NPROBE)
-        .withColumn("qres",
+        .withColumn("v",
           rotOpt.fold(rawQres)(r => graft.similarity.Pq.rotateCol(rawQres, r)))
-        .select($"qid", $"list_id", $"qres")
-      val luts = (0 until M).foldLeft(probes) { (df, m) =>
-        df.withColumn(s"lut$m", subDist($"qres", m))
-      }.drop("qres")
-      val adc = (0 until M).map(m =>
-        element_at(col(s"lut$m"), col(s"c$m") + 1)).reduce(_ + _)
+        .select($"qid", $"list_id", $"v")
+      val luts = graft.similarity.Pq.queryLuts(probes, cb, sub)
       // equi-join ON list_id: only probed lists' codes are touched
       val wAdc = Window.partitionBy($"qid").orderBy($"adc".asc, $"cid")
       val shortlist = broadcast(luts).join(codes, Seq("list_id"))
         .filter($"qid" =!= $"cid")
-        .withColumn("adc", adc)
+        .withColumn("adc", graft.similarity.Pq.adcCol(M))
         .withColumn("srank", row_number().over(wAdc))
         .filter($"srank" <= 50)
-        .select($"qid", $"cid")
-      val wRr = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      shortlist
-        .join(emb.select($"vec_id".as("qid"), $"v".as("qv")), Seq("qid"))
-        .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-        .withColumn("cos", cosine($"qv", $"cv"))
-        .withColumn("rank", row_number().over(wRr))
-        .filter($"rank" <= 5)
-        .select($"qid", $"cid")
+        .select($"qid", $"cid".as("node"))
+      TopK.exact(shortlist, emb.select($"vec_id".as("qid"), $"v"), emb, 5)
         .intersect(bf)
     }
     val hitsOpq = armHits(cbRot, Some(rot))
@@ -825,22 +755,10 @@ object SimilarityQueries {
     val batchMs = (System.nanoTime() - tBatch0) / 1e6 / reqs.length
     val shortlist = shortlists.reduce(_ unionByName _)
     // 3. exact rerank + recall vs brute force (sq10's closing shape)
-    val wRr = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = shortlist
-      .join(emb.select($"vec_id".as("qid"), $"v".as("qv")), Seq("qid"))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wRr))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val ann = TopK.exact(shortlist.withColumnRenamed("cid", "node"),
+      emb.select($"vec_id".as("qid"), $"v"), emb, 5)
+    val bf = TopK.truth(
+      emb.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"v"), emb, 5)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     bf.groupBy($"qid").agg(count(lit(1)).as("n_bf"))
       .join(hits, Seq("qid"), "left")
@@ -1185,26 +1103,12 @@ object SimilarityQueries {
     val emb = dots.select($"vec_id", explode(array(buckets: _*)).as("bk"))
       .select($"vec_id", $"bk.tbl", $"bk.bits")
     val cand = emb.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"tbl", $"bits")
-      .join(emb.select($"vec_id".as("cid"), $"tbl", $"bits"), Seq("tbl", "bits"))
-      .filter($"qid" =!= $"cid")
-      .select($"qid", $"cid").distinct()
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = cand
-      .join(broadcast(emb0.filter($"vec_id" < 16)
-        .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+      .join(emb.select($"vec_id".as("node"), $"tbl", $"bits"), Seq("tbl", "bits"))
+      .filter($"qid" =!= $"node")
+      .select($"qid", $"node").distinct()
+    val qs = emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
+    val ann = TopK.exact(cand, broadcast(qs), emb0, 5)
+    val bf = TopK.truth(qs, emb0, 5)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     val nc = cand.groupBy($"qid").agg(count(lit(1)).as("n_cand"))
     emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"))
@@ -1324,15 +1228,8 @@ object SimilarityQueries {
         .map("%02x".format(_)).mkString
       if (hex.charAt(0) <= '7') 1 else -1
     }
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-      .cache()
+    val qs = emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
+    val bf = TopK.truth(qs, emb0, 5).cache()
     // The sign of plane p depends only on (p, i) — md5-parity, not the
     // (bits, tables) setting — so the three arms' plane sets are NESTED
     // PREFIXES of 0 until max(b·t): compute ALL projections once per
@@ -1359,19 +1256,11 @@ object SimilarityQueries {
           "").as("bucket"))
       val cand = bits.filter($"vec_id" < 16)
         .select($"vec_id".as("qid"), $"tbl", $"bucket")
-        .join(bits.select($"vec_id".as("cid"), $"tbl", $"bucket"),
+        .join(bits.select($"vec_id".as("node"), $"tbl", $"bucket"),
           Seq("tbl", "bucket"))
-        .filter($"qid" =!= $"cid")
-        .select($"qid", $"cid").distinct()
-      val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      val ann = cand
-        .join(broadcast(emb0.filter($"vec_id" < 16)
-          .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-        .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-        .withColumn("cos", cosine($"qv", $"cv"))
-        .withColumn("rank", row_number().over(wAnn))
-        .filter($"rank" <= 5)
-        .select($"qid", $"cid")
+        .filter($"qid" =!= $"node")
+        .select($"qid", $"node").distinct()
+      val ann = TopK.exact(cand, broadcast(qs), emb0, 5)
       val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
       val nc = cand.groupBy($"qid").agg(count(lit(1)).as("n_cand"))
       emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"))
@@ -1517,27 +1406,13 @@ object SimilarityQueries {
         "").as("bucket"))
     val cand = bits.filter($"vec_id" < 16)
       .select($"vec_id".as("qid"), $"tbl", $"bucket")
-      .join(bits.select($"vec_id".as("cid"), $"tbl", $"bucket"),
+      .join(bits.select($"vec_id".as("node"), $"tbl", $"bucket"),
         Seq("tbl", "bucket"))
-      .filter($"qid" =!= $"cid")
-      .select($"qid", $"cid").distinct()
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = cand
-      .join(broadcast(emb0.filter($"vec_id" < 16)
-        .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+      .filter($"qid" =!= $"node")
+      .select($"qid", $"node").distinct()
+    val qs = emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
+    val ann = TopK.exact(cand, broadcast(qs), emb0, 5)
+    val bf = TopK.truth(qs, emb0, 5)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     val nc = cand.groupBy($"qid").agg(count(lit(1)).as("n_cand"))
     emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"))
@@ -1700,26 +1575,12 @@ object SimilarityQueries {
       .withColumn("rn", row_number().over(wP))
       .filter($"rn" <= NProbe)
       .select($"qid", $"k")
-    val cand = probes.join(aF.select($"vec_id".as("cid"), $"k"), Seq("k"))
-      .filter($"qid" =!= $"cid")
-      .select($"qid", $"cid")
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = cand
-      .join(broadcast(emb0.filter($"vec_id" < 20)
-        .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val cand = probes.join(aF.select($"vec_id".as("node"), $"k"), Seq("k"))
+      .filter($"qid" =!= $"node")
+      .select($"qid", $"node")
+    val qs = emb0.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v")
+    val ann = TopK.exact(cand, broadcast(qs), emb0, 5)
+    val bf = TopK.truth(qs, emb0, 5)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     val nc = cand.groupBy($"qid").agg(count(lit(1)).as("n_cand"))
     val nl = aF.agg(countDistinct($"k").as("n_lists"))
@@ -1820,50 +1681,20 @@ object SimilarityQueries {
     // raw-cosine ground truth
     def armTop5(frame: org.apache.spark.sql.DataFrame,
         cb: Seq[Seq[Seq[Double]]]): org.apache.spark.sql.DataFrame = {
-      def subDist(vCol: org.apache.spark.sql.Column, m: Int) =
-        transform(typedlit(cb(m)), c =>
-          aggregate(zip_with(slice(vCol, m * sub + 1, sub), c,
-            (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
-      val codes = (0 until M).foldLeft(frame.toDF()) { (df, m) =>
-          df.withColumn(s"d$m", subDist($"v", m))
-            .withColumn(s"c$m",
-              (array_position(col(s"d$m"), array_min(col(s"d$m"))) - 1).cast("int"))
-            .drop(s"d$m")
-        }
-        .select(($"vec_id".as("cid") +: (0 until M).map(m => col(s"c$m"))): _*)
-      val queries = (0 until M).foldLeft(
-        frame.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv"))) {
-        (df, m) =>
-          df.withColumn(s"lut$m",
-            transform(typedlit(cb(m)), c =>
-              aggregate(zip_with(slice($"qv", m * sub + 1, sub), c,
-                (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)))
-      }
-      val adcE = (0 until M).map(m =>
-        element_at(col(s"lut$m"), col(s"c$m") + 1)).reduce(_ + _)
+      val codes = graft.similarity.Pq.pqEncode(frame, cb, sub)
+        .withColumnRenamed("vec_id", "cid")
+      val queries = graft.similarity.Pq.queryLuts(
+        frame.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v"), cb, sub)
       val wAdc = Window.partitionBy($"qid").orderBy($"adc".asc, $"cid")
-      val shortlist = broadcast(queries.drop("qv")).join(codes, $"qid" =!= $"cid")
-        .withColumn("adc", adcE)
+      val shortlist = broadcast(queries).join(codes, $"qid" =!= $"cid")
+        .withColumn("adc", graft.similarity.Pq.adcCol(M))
         .withColumn("srank", row_number().over(wAdc))
         .filter($"srank" <= 50)
-        .select($"qid", $"cid")
-      val wRr = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      shortlist
-        .join(emb.select($"vec_id".as("qid"), $"v".as("qv")), Seq("qid"))
-        .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-        .withColumn("cos", cosine($"qv", $"cv"))
-        .withColumn("rank", row_number().over(wRr))
-        .filter($"rank" <= 5)
-        .select($"qid", $"cid")
+        .select($"qid", $"cid".as("node"))
+      TopK.exact(shortlist, emb.select($"vec_id".as("qid"), $"v"), emb, 5)
     }
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val bf = TopK.truth(
+      emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v"), emb, 5)
     val hitsP = armTop5(emb, cbPlain).intersect(bf)
       .groupBy($"qid").agg(count(lit(1)).as("n_p"))
     val hitsO = armTop5(embRot, cbRot).intersect(bf)
@@ -2163,15 +1994,10 @@ object SimilarityQueries {
     val vecs = Tables.embeddings(spark, dir)
       .select($"vec_id", toDouble($"embedding").as("v"))
       .cache()
-    // |Q|-bounded truth: broadcast the 16 queries, stream the corpus
-    // (BroadcastNestedLoopJoin, never a cartesian — sq02b's bf shape)
-    val bf = broadcast(vecs.filter($"vec_id" < 16)
-        .select($"vec_id".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k).select($"src", $"nbr")
-      .cache()
+    // |Q|-bounded truth, as edges: the 16 queries' exact top-k
+    val bf = TopK.truth(
+        vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v"), vecs, k)
+      .toDF("src", "nbr").cache()
     def summary(r: Int, e: org.apache.spark.sql.DataFrame) = {
       val hits = e.filter($"src" < 16).select($"src", $"nbr")
         .join(bf, Seq("src", "nbr"), "left_semi")
@@ -2187,7 +2013,7 @@ object SimilarityQueries {
     // sq21 IS the construction query: it always builds fresh (its
     // bench/probe number means "what a build costs"); the serving
     // queries share the cached build instead (nnDescentBuild)
-    val es = graft.similarity.KnnGraph.build(vecs, k, rounds)
+    val es = KnnGraph.build(vecs, k, rounds)
     es.zipWithIndex.map { case (e, r) => summary(r, e) }
       .reduce(_ unionByName _).orderBy($"round")
   }
@@ -2204,7 +2030,7 @@ object SimilarityQueries {
     * slices) or that TIME the build (sq22b) keep their own workDirs. */
   private def nnDescentBuild(vecs: org.apache.spark.sql.DataFrame,
       dir: String, k: Int, rounds: Int): Seq[org.apache.spark.sql.DataFrame] =
-    graft.similarity.KnnGraph.buildCached(vecs, dir, k, rounds)
+    KnnGraph.buildCached(vecs, dir, k, rounds)
 
   /** DuckDB CTEs for `rounds` greedy BEAM-SEARCH steps over the graph
     * CTE `graph(src, nbr)`: deterministic entry node per query, each
@@ -2286,60 +2112,39 @@ object SimilarityQueries {
       .select($"vec_id", toDouble($"embedding").as("v"))
       .cache()
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-      .localCheckpoint(true)
-    val nn = vecs.agg(count(lit(1)).as("n"))
+    val und = KnnGraph.undirected(graph).localCheckpoint(true)
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
-    def bsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
-      val ans = pool.filter($"node" =!= $"qid")
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node")
-      val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
-        .agg(count(lit(1)).as("nhit"))
-      pool.agg(count(lit(1)).as("pool_nodes"))
-        .crossJoin(broadcast(hits))
-        .select(lit(r.toLong).as("round"), $"pool_nodes",
-          ($"nhit".cast("double") / (16 * k)).as("recall_at_k"))
-    }
-    blindBeamPools(vecs, und, qv, nn, k, beamRounds)
-      .map { case (r, pool) => bsummary(r, pool) }
+    val bf = TopK.truth(qv, vecs, k).cache()
+    blindBeamPools(vecs, und, qv, k, beamRounds)
+      .map { case (r, pool) => poolRecall(r, pool, qv, vecs, bf, k) }
       .reduce(_ unionByName _).orderBy($"round")
   }
 
   /** The blind (filter-free, exact-cosine) beam walk sq22 hash-freezes,
     * shared verbatim with sq25 (which answers from the same pools under
-    * a metadata filter): ring entries, per-round undirected expansion,
-    * anti-join dedup, exact-cosine top-k frontier, checkpointed pool
-    * union. Returns (round, pool) for rounds 0..beamRounds. */
-  private def blindBeamPools(vecs: org.apache.spark.sql.DataFrame,
-      und: org.apache.spark.sql.DataFrame,
-      qv: org.apache.spark.sql.DataFrame,
-      nn: org.apache.spark.sql.DataFrame,
-      k: Int, beamRounds: Int): Seq[(Int, org.apache.spark.sql.DataFrame)] = {
-    import vecs.sparkSession.implicits._
-    graft.similarity.KnnGraph.beamTrace(
-      qv.crossJoin(broadcast(nn))
-        .select($"qid", pmod($"qid" * 37 + 1, $"n").cast("long").as("node")),
-      frontier => frontier.join(und, frontier("node") === und("src"))
-        .select(frontier("qid"), und("nbr").as("node")).distinct(),
-      fresh => fresh
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node"),
-      beamRounds)
+    * a metadata filter) and sq26: ring entries, per-round undirected
+    * expansion, anti-join dedup, exact-cosine top-k frontier,
+    * checkpointed pool union. Returns (round, pool) for rounds
+    * 0..beamRounds. */
+  private def blindBeamPools(vecs: DataFrame, und: DataFrame, qv: DataFrame,
+      k: Int, beamRounds: Int): Seq[(Int, DataFrame)] =
+    KnnGraph.beamTrace(KnnGraph.ringEntries(vecs, qv), KnnGraph.expandOver(und),
+      TopK.exact(_, broadcast(qv), vecs, k), beamRounds)
+
+  /** One beam round's pool accounting, the (round, pool_nodes,
+    * recall_at_k) row sq22, sq25 and sq26 report: the pool's exact
+    * top-k answer (self excluded) scored against the 16-query
+    * brute-force truth `bf` (qid, node). */
+  private def poolRecall(r: Int, pool: DataFrame, qv: DataFrame,
+      vecs: DataFrame, bf: DataFrame, k: Int): DataFrame = {
+    import pool.sparkSession.implicits._
+    val hits = TopK.exact(pool.filter($"node" =!= $"qid"), broadcast(qv), vecs, k)
+      .join(bf, Seq("qid", "node"), "left_semi")
+      .agg(count(lit(1)).as("nhit"))
+    pool.agg(count(lit(1)).as("pool_nodes"))
+      .crossJoin(broadcast(hits))
+      .select(lit(r.toLong).as("round"), $"pool_nodes",
+        ($"nhit".cast("double") / (16 * k)).as("recall_at_k"))
   }
 
   /** Build-vs-serve latency split for the STORED k-NN graph — sq18b's
@@ -2379,18 +2184,11 @@ object SimilarityQueries {
     * split this row records. */
   val sq22bGraphServingLatency: QueryDef = rowsOnly("sq22b_graph_serving_latency") { (spark, dir) =>
     import spark.implicits._
-    import graft.similarity.KnnGraph
     val k = 8; val buildRounds = 4; val beamRounds = 4
     val vecs = Tables.embeddings(spark, dir)
       .select($"vec_id", toDouble($"embedding").as("v")).cache()
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
+    val bf = TopK.truth(qv, vecs, k).cache()
     val nq = qv.count()
     val root = graft.util.Scratch.tempDir("graft-sq22b")
     val tBuild0 = System.nanoTime()
@@ -2424,7 +2222,8 @@ object SimilarityQueries {
     val tServe0 = System.nanoTime()
     val ringTrace = KnnGraph.serveStoredTrace(
       spark, s"$root/g", vecs, qv, k, beamRounds)
-    val ringServed = KnnGraph.rankPool(vecs, qv, ringTrace.last._2, k).collect()
+    val ringServed = TopK.exact(ringTrace.last._2.filter($"node" =!= $"qid"),
+      broadcast(qv), vecs, k).collect()
     val serveMs = (System.nanoTime() - tServe0) / 1e6 / nq
     val ringRecalls = recallsOf(ringTrace)
     // the store-ONLY loop (pruned vector point-fetch, no corpus frame
@@ -2548,7 +2347,6 @@ object SimilarityQueries {
     * compared against is the once-in-a-while durable build. */
   val sq23GraphInsertDrift: QueryDef = rowsOnly("sq23_graph_insert_drift") { (spark, dir) =>
     import spark.implicits._
-    import graft.similarity.KnnGraph
     val k = 8; val buildRounds = 3; val beamRounds = 3
     val all = Tables.embeddings(spark, dir)
       .select($"vec_id", toDouble($"embedding").as("v")).cache()
@@ -2574,12 +2372,7 @@ object SimilarityQueries {
         vecPath = Some(s"$root/vec")))
     val insMs = (System.nanoTime() - tIns0) / 1e6 / nHold
     val queries = all.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = broadcast(queries.select($"qid".as("src"), $"v".as("qv")))
-      .join(all.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k).select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
+    val bf = TopK.truth(queries, all, k).cache()
     def recallFrom(path: String,
         entries: Option[org.apache.spark.sql.DataFrame] = None): Double =
       KnnGraph.serveStored(spark, path, all, queries, k, beamRounds, entries)
@@ -2777,42 +2570,18 @@ object SimilarityQueries {
       .localCheckpoint(true)
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
     // per-query M×K LUTs of partial squared distances (sq09's shape)
-    val qluts = (0 until M).foldLeft(qv.toDF()) { (df, mi) =>
-      df.withColumn(s"lut$mi", graft.similarity.Pq.lutCol($"v", cb, sub, mi))
-    }.drop("v")
-    val adc = (0 until M).map(mi =>
-      element_at(col(s"lut$mi"), col(s"c$mi") + 1)).reduce(_ + _)
+    val qluts = graft.similarity.Pq.queryLuts(qv, cb, sub)
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-      .localCheckpoint(true)
-    val nn = vecs.agg(count(lit(1)).as("n"))
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
-    def adcScored(pairs: org.apache.spark.sql.DataFrame) = pairs
-      .join(broadcast(qluts), Seq("qid"))
-      .join(codes, Seq("node"))
-      .withColumn("adist", adc)
-      .select($"qid", $"node", $"adist")
-    def qsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
-      val shl = adcScored(pool.filter($"node" =!= $"qid"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
-        .filter($"rn" <= 2 * k)
-      val hitsAdc = shl.filter($"rn" <= k).select($"qid", $"node")
+    val und = KnnGraph.undirected(graph).localCheckpoint(true)
+    val bf = TopK.truth(qv, vecs, k).cache()
+    def qsummary(r: Int, pool: DataFrame) = {
+      // the ADC top-2k shortlist; its ADC top-k is the nested prefix
+      val shl = TopK.adc(pool.filter($"node" =!= $"qid"), broadcast(qluts),
+        codes, 2 * k, carry = Seq(TopK.Rank))
+      val hitsAdc = shl.filter(col(TopK.Rank) <= k).select($"qid", $"node")
         .join(bf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("nhit_adc"))
-      val hits = shl.select($"qid", $"node")
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rr", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rr" <= k).select($"qid", $"node")
+      val hits = TopK.exact(shl.select($"qid", $"node"), broadcast(qv), vecs, k)
         .join(bf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("nhit"))
       pool.agg(count(lit(1)).as("pool_nodes"))
@@ -2822,17 +2591,9 @@ object SimilarityQueries {
           ($"nhit_adc".cast("double") / (16 * k)).as("recall_adc"),
           ($"nhit".cast("double") / (16 * k)).as("recall_at_k"))
     }
-    graft.similarity.KnnGraph.beamTrace(
-      qv.crossJoin(broadcast(nn))
-        .select($"qid", pmod($"qid" * 37 + 1, $"n").cast("long").as("node")),
-      frontier => frontier.join(und, frontier("node") === und("src"))
-        .select(frontier("qid"), und("nbr").as("node")).distinct(),
+    KnnGraph.beamTrace(KnnGraph.ringEntries(vecs, qv), KnnGraph.expandOver(und),
       // the round's ranking reads 4-byte codes, never vectors
-      fresh => adcScored(fresh)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node"),
-      beamRounds)
+      TopK.adc(_, broadcast(qluts), codes, k), beamRounds)
       .map { case (r, pool) => qsummary(r, pool) }
       .reduce(_ unionByName _).orderBy($"round")
   }
@@ -2919,19 +2680,10 @@ object SimilarityQueries {
     val vecs = emb.select($"vec_id", toDouble($"embedding").as("v")).cache()
     val lbl = emb.select($"vec_id".as("node"), $"label")
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-      .localCheckpoint(true)
-    val nn = vecs.agg(count(lit(1)).as("n"))
+    val und = KnnGraph.undirected(graph).localCheckpoint(true)
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
     val tgt = qv.select($"qid", pmod($"qid", lit(nLabels.toLong)).as("tl"))
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
+    val bf = TopK.truth(qv, vecs, k).cache()
     // filtered truth: the label-pruned exact scan (at scale, a
     // label-bucketed layout turns this into a partition-pruned read)
     val fbf = broadcast(qv.join(tgt, Seq("qid")).select($"qid", $"v".as("qv"), $"tl"))
@@ -2942,37 +2694,22 @@ object SimilarityQueries {
       .filter($"rn" <= k)
       .select($"qid", $"node")
       .cache()
-    def fsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
-      val ans = pool.filter($"node" =!= $"qid")
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node")
-      val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
-        .agg(count(lit(1)).as("nhit"))
+    def fsummary(r: Int, pool: DataFrame) = {
       val fp = pool.filter($"node" =!= $"qid")
         .join(lbl, Seq("node"))
         .join(broadcast(tgt), Seq("qid"))
         .filter($"label" === $"tl")
         .select($"qid", $"node")
-      val fans = fp
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node")
-      val fhits = fans.join(fbf, Seq("qid", "node"), "left_semi")
+      val fhits = TopK.exact(fp, broadcast(qv), vecs, k)
+        .join(fbf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("fhit"))
-      pool.agg(count(lit(1)).as("pool_nodes"))
+      poolRecall(r, pool, qv, vecs, bf, k)
         .crossJoin(broadcast(fp.agg(count(lit(1)).as("match_pool_nodes"))))
-        .crossJoin(broadcast(hits))
         .crossJoin(broadcast(fhits))
-        .select(lit(r.toLong).as("round"), $"pool_nodes", $"match_pool_nodes",
-          ($"nhit".cast("double") / (16 * k)).as("recall_at_k"),
+        .select($"round", $"pool_nodes", $"match_pool_nodes", $"recall_at_k",
           ($"fhit".cast("double") / (16 * k)).as("recall_filtered"))
     }
-    blindBeamPools(vecs, und, qv, nn, k, beamRounds)
+    blindBeamPools(vecs, und, qv, k, beamRounds)
       .map { case (r, pool) => fsummary(r, pool) }
       .reduce(_ unionByName _).orderBy($"round")
   }
@@ -3084,47 +2821,26 @@ object SimilarityQueries {
     // candidate stage (each node's 24 best scored 2-hop candidates —
     // Vamana's search-list bound L) ∪ the ring init's spread edges, so
     // the pool is wide AND long while staying L·n rows at any scale
-    val cand = graft.similarity.KnnGraph.scoredCandidates(vecs, plain)
+    val cand = KnnGraph.scoredCandidates(vecs, plain)
       .withColumn("rn", row_number().over(
         Window.partitionBy($"src").orderBy($"cos".desc, $"nbr")))
       .filter($"rn" <= 24).drop("rn")
       .union(es.head.select($"src", $"nbr", $"cos"))
       .distinct().localCheckpoint(true)
-    val pruned = graft.similarity.KnnGraph
+    val pruned = KnnGraph
       .robustPrune(vecs, cand, degree, alpha)
       .select($"src", $"nbr").localCheckpoint(true)
-    val nn = vecs.agg(count(lit(1)).as("n"))
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
-    def closure(g: org.apache.spark.sql.DataFrame) =
-      g.select($"src", $"nbr")
-        .union(g.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-        .localCheckpoint(true)
-    def recallRows(pools: Seq[(Int, org.apache.spark.sql.DataFrame)]) =
-      pools.map { case (r, pool) =>
-        val ans = pool.filter($"node" =!= $"qid")
-          .join(broadcast(qv), Seq("qid"))
-          .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-          .filter($"rn" <= k).select($"qid", $"node")
-        val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
-          .agg(count(lit(1)).as("nhit"))
-        pool.agg(count(lit(1)).as("pool_nodes"))
-          .crossJoin(broadcast(hits))
-          .select(lit(r.toLong).as("round"), $"pool_nodes",
-            ($"nhit".cast("double") / (16 * k)).as("recall_at_k"))
-      }.reduce(_ unionByName _)
-    val a = recallRows(blindBeamPools(vecs, closure(plain), qv, nn, k, beamRounds))
+    val bf = TopK.truth(qv, vecs, k).cache()
+    def recallRows(g: DataFrame) =
+      blindBeamPools(vecs, KnnGraph.undirected(g).localCheckpoint(true), qv,
+          k, beamRounds)
+        .map { case (r, pool) => poolRecall(r, pool, qv, vecs, bf, k) }
+        .reduce(_ unionByName _)
+    val a = recallRows(plain)
       .select($"round", $"pool_nodes".as("pool_plain"),
         $"recall_at_k".as("recall_plain"))
-    val b = recallRows(blindBeamPools(vecs, closure(pruned), qv, nn, k, beamRounds))
+    val b = recallRows(pruned)
       .select($"round", $"pool_nodes".as("pool_pruned"),
         $"recall_at_k".as("recall_pruned"))
     a.join(b, Seq("round"))
@@ -3220,7 +2936,7 @@ object SimilarityQueries {
     * directory regardless of how many nodes it holds. */
   val sq27ClusteredGraphStore: QueryDef = rowsOnly("sq27_clustered_graph_store") { (spark, dir) =>
     import spark.implicits._
-    import graft.similarity.{KnnGraph, Pq}
+    import graft.similarity.Pq
     val k = 8; val buildRounds = 4; val beamRounds = 4; val cells = 16
     val vecs = Tables.embeddings(spark, dir)
       .select($"vec_id", toDouble($"embedding").as("v")).cache()
@@ -3343,7 +3059,7 @@ object SimilarityQueries {
     * insert/erase rewrites, corpus-size-free serving. */
   val sq28ComposedGraphStore: QueryDef = rowsOnly("sq28_composed_graph_store") { (spark, dir) =>
     import spark.implicits._
-    import graft.similarity.{KnnGraph, Pq}
+    import graft.similarity.Pq
     val k = 8; val beamRounds = 4
     val degree = 8; val alpha = 1.25
     val cells = 16; val m = 8; val sub = 8
@@ -3419,11 +3135,7 @@ object SimilarityQueries {
     val qv = vecs.filter($"vec_id" < 16)
       .select($"vec_id".as("qid"), $"v").cache()
     val nq = qv.count()
-    val bf = broadcast(qv.select($"qid", $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), $"qid" =!= $"node")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"qv", $"cv").desc, $"node")))
-      .filter($"rn" <= k).select($"qid", $"node").cache()
+    val bf = TopK.truth(qv, vecs, k).cache()
     bf.count()
     // SERVE-BUDGET POLICY (r16 verdict #2): build depth already
     // self-tunes (buildToServedRecall above); the quantized head's

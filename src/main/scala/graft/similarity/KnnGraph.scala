@@ -90,18 +90,7 @@ object KnnGraph {
         s"$inRange of $n corpus ids fall in that range — most init " +
         "edges would be silently dropped; remap to a dense rank before " +
         "building, then remap the edge endpoints back")
-    val fingerprint = s"k=$k,n=$n"
-    if (hfs.exists(metaPath)) {
-      val in = hfs.open(metaPath)
-      val prev = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(prev == fingerprint,
-        s"workDir $workDir holds a build with parameters [$prev]; " +
-          s"refusing to resume with [$fingerprint] — use a fresh workDir")
-    } else {
-      val out = hfs.create(metaPath, true)
-      try out.write(fingerprint.getBytes("UTF-8")) finally out.close()
-    }
+    resumeGuard(hfs, metaPath, s"k=$k,n=$n", "build")
     def roundDir(r: Int) = s"$workDir/e_$r"
     def done(r: Int) = hfs.exists(
       new org.apache.hadoop.fs.Path(roundDir(r), "_SUCCESS"))
@@ -265,41 +254,37 @@ object KnnGraph {
       vecs.sparkSession.sparkContext.hadoopConfiguration)
     val decisionPath = new org.apache.hadoop.fs.Path(workDir,
       s"_graft_policy_$budgetTag")
-    val decisionTag = policyPruneTag(entriesFor.isDefined, entriesTag,
+    // the prune dir name carries every PRUNE-DETERMINING parameter
+    // (degree, α, candidate beam depth, and the caller's entries tag —
+    // e.g. a centroid digest), so distinct serving budgets or entry
+    // disciplines over one shared workDir COEXIST as sibling dir
+    // families instead of colliding on robustPrune's fingerprint
+    // guard (r15 advice: a second same-process caller with a
+    // different degree/α/centroids hard-failed where it should have
+    // computed). Entry-consistent prunes still get their own family:
+    // their candidates differ from ring-start prunes.
+    val pruneDirTag = policyPruneTag(entriesFor.isDefined, entriesTag,
       degree, alpha, candBeamRounds)
-    def readSmall(p: org.apache.hadoop.fs.Path): String = {
-      val in = hfs0.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    if (hfs0.exists(decisionPath)) {
-      // a truncated decision (crash inside the small write) must fall
-      // back to the ladder, never brick the build — parse failures
-      // delete the file and recompute
-      val parsed = scala.util.Try {
-        val lines = readSmall(decisionPath).split("\n")
-        val depth = lines(0).stripPrefix("depth=").toInt
-        val fp = lines(1).stripPrefix("fingerprint=")
-        val storedTrace = lines(2).stripPrefix("trace=").split(",")
-          .filter(_.nonEmpty).map { e =>
-            val Array(dd, r) = e.split(":"); (dd.toInt, r.toDouble)
-          }.toSeq
-        (depth, fp, storedTrace)
-      }
-      parsed match {
-        case scala.util.Success((depth, fp, storedTrace)) =>
-          val rounds = buildDurable(vecs, k, depth, workDir)
-          val pruned = robustPrune(vecs,
-              searchCandidates(vecs, rounds.last, k, candBeamRounds,
-                entries = entriesFor.map(f =>
-                  f(vecs.select($"vec_id".as("qid"), $"v")))),
-              degree, alpha, Some(s"$workDir/$decisionTag$depth"),
-              knownFingerprint = Some(fp))
-            .select($"src", $"nbr").localCheckpoint(true)
-          return (rounds, depth, pruned, storedTrace)
-        case scala.util.Failure(_) =>
-          hfs0.delete(decisionPath, false): Unit
-      }
+    readDecision(hfs0, decisionPath) { lines =>
+      val depth = lines(0).stripPrefix("depth=").toInt
+      val fp = lines(1).stripPrefix("fingerprint=")
+      val storedTrace = lines(2).stripPrefix("trace=").split(",")
+        .filter(_.nonEmpty).map { e =>
+          val Array(dd, r) = e.split(":"); (dd.toInt, r.toDouble)
+        }.toSeq
+      (depth, fp, storedTrace)
+    } match {
+      case Some((depth, fp, storedTrace)) =>
+        val rounds = buildDurable(vecs, k, depth, workDir)
+        val pruned = robustPrune(vecs,
+            searchCandidates(vecs, rounds.last, k, candBeamRounds,
+              entries = entriesFor.map(f =>
+                f(vecs.select($"vec_id".as("qid"), $"v")))),
+            degree, alpha, Some(s"$workDir/$pruneDirTag$depth"),
+            knownFingerprint = Some(fp))
+          .select($"src", $"nbr").localCheckpoint(true)
+        return (rounds, depth, pruned, storedTrace)
+      case None =>
     }
     // deterministic held-out probes: the first nProbes corpus vectors
     // as queries (self excluded from both truth and serve — the probe
@@ -311,12 +296,7 @@ object KnnGraph {
     val nq = qv.count()
     require(nq > 0, s"no probe queries: no vec_id < $nProbes in the corpus")
     // exact ground truth, computed ONCE for every evaluation
-    val bf = broadcast(qv.select($"qid", $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("node"), $"v".as("cv")),
-        $"qid" =!= $"node")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"qv", $"cv").desc, $"node")))
-      .filter($"rn" <= serveK).select($"qid", $"node").localCheckpoint(true)
+    val bf = TopK.truth(qv, vecs, serveK).localCheckpoint(true)
     // ENTRY DISCIPLINE IS PART OF THE ARTIFACT (r15 measured): the
     // eval serve AND every eval prune's candidate searches start from
     // `entriesFor` when given — the serving head's own entry rule
@@ -327,16 +307,13 @@ object KnnGraph {
     val entryOf: DataFrame => DataFrame =
       entriesFor.getOrElse(ringEntries(vecs, _))
     def servedRecall(pruned: DataFrame): Double = {
-      val und = pruned.select($"src", $"nbr")
-        .union(pruned.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-        .localCheckpoint(true)
-      def expand(frontier: DataFrame): DataFrame =
-        frontier.join(und, frontier("node") === und("src"))
-          .select(frontier("qid"), und("nbr").as("node")).distinct()
-      val pool = beamTrace(entryOf(qv), expand,
-        fresh => rankPool(vecs, qv, fresh.localCheckpoint(true), serveK),
+      val und = undirected(pruned).localCheckpoint(true)
+      def answer(pool: DataFrame) =
+        TopK.exact(pool.filter($"node" =!= $"qid"), broadcast(qv), vecs, serveK)
+      val pool = beamTrace(entryOf(qv), expandOver(und),
+        fresh => answer(fresh.localCheckpoint(true)),
         serveBeamRounds).last._2
-      val served = rankPool(vecs, qv, pool, serveK)
+      val served = answer(pool)
       val recall = served.join(bf, Seq("qid", "node"), "left_semi").count()
         .toDouble / (nq * serveK)
       // the eval's undirected closure is dead once the recall lands —
@@ -351,17 +328,6 @@ object KnnGraph {
     var stale = 0
     var best = 0.0
     var d = step
-    // the prune dir name carries every PRUNE-DETERMINING parameter
-    // (degree, α, candidate beam depth, and the caller's entries tag —
-    // e.g. a centroid digest), so distinct serving budgets or entry
-    // disciplines over one shared workDir COEXIST as sibling dir
-    // families instead of colliding on robustPrune's fingerprint
-    // guard (r15 advice: a second same-process caller with a
-    // different degree/α/centroids hard-failed where it should have
-    // computed). Entry-consistent prunes still get their own family:
-    // their candidates differ from ring-start prunes.
-    val pruneDirTag = policyPruneTag(entriesFor.isDefined, entriesTag,
-      degree, alpha, candBeamRounds)
     val dbg = sys.env.contains("GRAFT_POLICY_DEBUG")
     // corpus count once for every depth's slice derivation — a ladder
     // would otherwise pay one count() job per evaluation (r15 advice)
@@ -395,10 +361,8 @@ object KnnGraph {
     // disk before this cleanup existed). The chosen depth's dir IS the
     // artifact and stays. A later resume re-pays only the deleted
     // losers, deterministically (BuildPolicySpec's resume test).
-    val hfs = new org.apache.hadoop.fs.Path(workDir).getFileSystem(
-      vecs.sparkSession.sparkContext.hadoopConfiguration)
     trace.map(_._1).filter(_ != chosen).foreach { dd =>
-      hfs.delete(new org.apache.hadoop.fs.Path(
+      hfs0.delete(new org.apache.hadoop.fs.Path(
         s"$workDir/$pruneDirTag$dd"), true): Unit
       prunedAt(dd).unpersist(): Unit
     }
@@ -407,14 +371,55 @@ object KnnGraph {
     // hands back to robustPrune's knownFingerprint seam
     val chosenMeta = new org.apache.hadoop.fs.Path(
       s"$workDir/$pruneDirTag$chosen", "_graft_prune")
-    if (hfs.exists(chosenMeta)) {
-      val body = s"depth=$chosen\nfingerprint=${readSmall(chosenMeta)}\n" +
-        s"trace=${trace.map { case (dd, r) => s"$dd:$r" }.mkString(",")}"
-      val out = hfs.create(decisionPath, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
+    if (hfs0.exists(chosenMeta))
+      writeSmall(hfs0, decisionPath, s"depth=$chosen\n" +
+        s"fingerprint=${readSmall(hfs0, chosenMeta)}\n" +
+        s"trace=${trace.map { case (dd, r) => s"$dd:$r" }.mkString(",")}")
     (rounds, chosen, prunedAt(chosen), trace.toSeq)
   }
+
+  /** A small metadata file's trimmed UTF-8 content. */
+  private def readSmall(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+    finally in.close()
+  }
+
+  /** Write (replace) a small metadata file. */
+  private def writeSmall(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, body: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** A persisted policy decision ([[buildToServedRecall]]'s depth pick,
+    * [[serveBudgetPolicy]]'s (L, W) pick), its lines parsed by `parse`;
+    * None when no decision is recorded. A truncated or corrupt file (a
+    * crash inside the small write) must fall back to the ladder, never
+    * brick the caller: a parse failure deletes it and reads as None.
+    * The ladder rewrites it with [[writeSmall]]. */
+  private def readDecision[T](fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path)(parse: Array[String] => T): Option[T] =
+    if (!fs.exists(p)) None
+    else scala.util.Try(parse(readSmall(fs, p).split("\n"))) match {
+      case scala.util.Success(d) => Some(d)
+      case scala.util.Failure(_) => fs.delete(p, false); None
+    }
+
+  /** The loud-resume guard of every durable workDir (a build, a refine,
+    * a prune): the first run records `fingerprint` under `meta`; a
+    * later run over the same dir must present the same one, otherwise
+    * stale rounds would silently reload under different parameters. */
+  private def resumeGuard(fs: org.apache.hadoop.fs.FileSystem,
+      meta: org.apache.hadoop.fs.Path, fingerprint: String,
+      kind: String): Unit =
+    if (fs.exists(meta)) {
+      val prev = readSmall(fs, meta)
+      require(prev == fingerprint,
+        s"workDir ${meta.getParent} holds a $kind with parameters [$prev]; " +
+          s"refusing to resume with [$fingerprint] — use a fresh workDir")
+    } else writeSmall(fs, meta, fingerprint)
 
   /** The depth-keyed policy prune dir family's name prefix — shared by
     * [[buildToServedRecall]] (which writes dirs under it) and
@@ -614,25 +619,19 @@ object KnnGraph {
       new org.apache.hadoop.fs.Path(wd, s"_graft_policy_serve_$budgetTag"))
     val hfs = decisionPath.map(_.getFileSystem(
       spark.sparkContext.hadoopConfiguration))
-    for (p <- decisionPath; fs <- hfs if fs.exists(p)) {
-      val parsed = scala.util.Try {
-        val in = fs.open(p)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim.split("\n") finally in.close()
-        val l = lines(0).stripPrefix("l=").toInt
-        val w = lines(1).stripPrefix("w=").toInt
-        val r = lines(2).stripPrefix("recall=").toDouble
-        val t = lines(3).stripPrefix("trace=").split(",")
-          .filter(_.nonEmpty).map { e =>
-            val Array(el, ew, er) = e.split(":")
-            (el.toInt, ew.toInt, er.toDouble)
-          }.toSeq
-        ((l, w), r, t)
-      }
-      parsed match {
-        case scala.util.Success(d) => return d
-        case scala.util.Failure(_) => fs.delete(p, false): Unit
-      }
+    for (p <- decisionPath; fs <- hfs) readDecision(fs, p) { lines =>
+      val l = lines(0).stripPrefix("l=").toInt
+      val w = lines(1).stripPrefix("w=").toInt
+      val r = lines(2).stripPrefix("recall=").toDouble
+      val t = lines(3).stripPrefix("trace=").split(",")
+        .filter(_.nonEmpty).map { e =>
+          val Array(el, ew, er) = e.split(":")
+          (el.toInt, ew.toInt, er.toDouble)
+        }.toSeq
+      ((l, w), r, t)
+    } match {
+      case Some(d) => return d
+      case None =>
     }
     def recallOf(ans: DataFrame): Double =
       ans.join(truth, Seq("qid", "node"), "left_semi").count()
@@ -666,12 +665,9 @@ object KnnGraph {
       val best = trace.maxBy(_._3)
       ((best._1, best._2), best._3)
     }
-    for (p <- decisionPath; fs <- hfs) {
-      val body = s"l=$cl\nw=$cw\nrecall=$cr\n" +
-        s"trace=${trace.map { case (l, w, r) => s"$l:$w:$r" }.mkString(",")}"
-      val out = fs.create(p, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
+    for (p <- decisionPath; fs <- hfs)
+      writeSmall(fs, p, s"l=$cl\nw=$cw\nrecall=$cr\n" +
+        s"trace=${trace.map { case (l, w, r) => s"$l:$w:$r" }.mkString(",")}")
     ((cl, cw), cr, trace.toSeq)
   }
 
@@ -755,24 +751,20 @@ object KnnGraph {
   }
 
   /** Dedup-aware mergeable top-k: k-bounded buffers of DISTINCT
-    * neighbors ordered by (cos DESC, nbr ASC) under [[nanSafeCompare]]
-    * — exactly the `row_number` window ordering [[tighten]] replaces.
-    * Requires (and the tighten pipeline guarantees) that every
-    * occurrence of an id within a group carries the same cos. */
+    * neighbors in [[TopK.before]] order — exactly the `row_number`
+    * window ordering [[tighten]] replaces. Requires (and the tighten
+    * pipeline guarantees) that every occurrence of an id within a
+    * group carries the same cos. */
   private final class TopKDedup(k: Int) extends
       org.apache.spark.sql.expressions.Aggregator[
         (Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
-    private def before(a: (Long, Double), b: (Long, Double)): Boolean = {
-      val c = nanSafeCompare(b._2, a._2)
-      c < 0 || (c == 0 && a._1 < b._1)
-    }
     private def trim(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
-      s.distinctBy(_._1).sortWith(before).take(k)
+      TopK.local(s.distinctBy(_._1), k)
     override def zero: Seq[(Long, Double)] = Seq.empty
     override def reduce(b: Seq[(Long, Double)],
         a: (Long, Double)): Seq[(Long, Double)] =
       if (b.exists(_._1 == a._1)) b
-      else if (b.size < k || before(a, b.last)) trim(b :+ a)
+      else if (b.size < k || TopK.before(a, b.last)) trim(b :+ a)
       else b
     override def merge(x: Seq[(Long, Double)],
         y: Seq[(Long, Double)]): Seq[(Long, Double)] = trim(x ++ y)
@@ -793,14 +785,31 @@ object KnnGraph {
     * (≤ 2kn-row, 16-byte-wide) frame — the cheapest place to dedup. */
   private def candidatePairsDup(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
-    val undirected = e.select($"src", $"nbr")
-      .union(e.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-    undirected.as("a")
-      .join(undirected.as("b"), $"a.nbr" === $"b.src")
+    val und = undirected(e)
+    und.as("a")
+      .join(und.as("b"), $"a.nbr" === $"b.src")
       .select($"a.src".as("src"), $"b.nbr".as("nbr"))
       .filter($"src" =!= $"nbr")
       .union(e.select($"src", $"nbr"))
   }
+
+  /** The UNDIRECTED closure of an edge frame's (src, nbr) pairs — both
+    * directions, distinct. Lazy: callers that walk it repeatedly
+    * checkpoint it. */
+  def undirected(graph: DataFrame): DataFrame = {
+    import graph.sparkSession.implicits._
+    graph.select($"src", $"nbr")
+      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
+  }
+
+  /** One in-memory frontier expansion over an undirected closure `und`
+    * ([[undirected]]): the distinct (qid, neighbor) pairs of a (qid,
+    * node) frontier — [[beamTrace]]'s `expand` for every walk over an
+    * edge FRAME (the stored walks expand through
+    * [[expandStored]]/[[expandClustered]] instead). */
+  def expandOver(und: DataFrame): DataFrame => DataFrame = frontier =>
+    frontier.join(und, frontier("node") === und("src"))
+      .select(frontier("qid"), und("nbr").as("node")).distinct()
 
   /** The scored candidate frame of one NN-Descent round — each node's
     * 2-hop neighborhood through the undirected closure ∪ its current
@@ -870,18 +879,7 @@ object KnnGraph {
     // frontier and the final candidate union distincts edges — dups
     // cost join width, never answers.
     val und = (if (graphIsSymmetric) graph.select($"src", $"nbr")
-      else graph.select($"src", $"nbr")
-        .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct())
-      .localCheckpoint(true)
-    def expand(frontier: DataFrame): DataFrame =
-      frontier.join(und, frontier("node") === und("src"))
-        .select(frontier("qid"), und("nbr").as("node")).distinct()
-    def keep(fresh: DataFrame): DataFrame = fresh
-      .join(queries.select($"qid", $"v".as("qv")), Seq("qid"))
-      .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"qv", $"cv").desc, $"node")))
-      .filter($"rn" <= k).select($"qid", $"node")
+      else undirected(graph)).localCheckpoint(true)
     // BOUNDED WORKING SETS (r15): with every corpus node a query, one
     // beam round attaches two d-dim vectors to |Q|·k·degree expansion
     // rows — ~20M rows / tens of GB of shuffle-sort at 200k queries,
@@ -902,7 +900,9 @@ object KnnGraph {
     val poolOf: DataFrame => DataFrame = qs =>
       beamTrace(entries.map(_.join(qs.select($"qid"), Seq("qid"), "left_semi"))
           .getOrElse(ringEntries(vecs, qs)),
-        expand, keep, beamRounds).last._2
+        expandOver(und),
+        // queries are the whole corpus here: never broadcast
+        TopK.exact(_, queries, vecs, k), beamRounds).last._2
     val pool = if (nSlices <= 1) poolOf(queries)
       else {
         // materialize the merged pool ONCE, then free the per-slice
@@ -1108,9 +1108,7 @@ object KnnGraph {
         degree, alpha, pruneWorkDir)
       .select($"src", $"nbr")
     // S's fresh edges, symmetrized and bucket-routed like the writer's
-    val sym = prunedScope
-      .union(prunedScope.select($"nbr".as("src"), $"src".as("nbr")))
-      .distinct()
+    val sym = undirected(prunedScope)
     // bucket routing for sym's endpoints, scope-bounded and read from
     // the store (semi-join first, THEN distinct — the assignment frame
     // never exceeds the repair scope ∪ its chosen neighbors); the
@@ -1293,18 +1291,8 @@ object KnnGraph {
     // the same corpus) would silently return the OLD seed's refined
     // rounds. The fingerprint therefore includes a content digest of the
     // seed's edge set (count + order-independent XOR of edge hashes).
-    val fingerprint = s"k=$k,n=${vecs.count()},seed=${graphDigest(graph)}"
-    if (hfs.exists(metaPath)) {
-      val in = hfs.open(metaPath)
-      val prev = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(prev == fingerprint,
-        s"workDir $workDir holds a refine with parameters [$prev]; " +
-          s"refusing to resume with [$fingerprint] — use a fresh workDir")
-    } else {
-      val out = hfs.create(metaPath, true)
-      try out.write(fingerprint.getBytes("UTF-8")) finally out.close()
-    }
+    resumeGuard(hfs, metaPath,
+      s"k=$k,n=${vecs.count()},seed=${graphDigest(graph)}", "refine")
     def roundDir(r: Int) = s"$workDir/r_$r"
     def done(r: Int) = hfs.exists(
       new org.apache.hadoop.fs.Path(roundDir(r), "_SUCCESS"))
@@ -1371,7 +1359,7 @@ object KnnGraph {
     * [pick the (cos DESC, nbr) top-1 remaining per src] → [anti-prune
     * the remainder through the pick's α-cover test] execute as ONE
     * shuffle: group the vector-attached candidates by src and replay
-    * the greedy locally per node with [[cosineLocal]] — the arithmetic
+    * the greedy locally per node with [[TopK.cosineLocal]] — the arithmetic
     * twin of the `cosine` native expression (GraphPruneSpec proves the
     * driver-side replay's edge set EQUALS the relational unrolling's,
     * bit for bit; sq26's DuckDB oracle replays the same rounds in SQL).
@@ -1425,19 +1413,8 @@ object KnnGraph {
         // `knownFingerprint` skips the two digest aggregate passes on a
         // warm resume ([[pruneCached]]'s per-key cache); the guard below
         // still compares it against the workDir's recorded metadata
-        val fingerprint = knownFingerprint.getOrElse(
-          pruneFingerprint(vecs, cand, r, alpha))
-        if (hfs.exists(metaPath)) {
-          val in = hfs.open(metaPath)
-          val prev = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim finally in.close()
-          require(prev == fingerprint,
-            s"workDir $wd holds a prune with parameters [$prev]; " +
-              s"refusing to resume with [$fingerprint] — use a fresh workDir")
-        } else {
-          val out = hfs.create(metaPath, true)
-          try out.write(fingerprint.getBytes("UTF-8")) finally out.close()
-        }
+        resumeGuard(hfs, metaPath, knownFingerprint.getOrElse(
+          pruneFingerprint(vecs, cand, r, alpha)), "prune")
         def done(name: String) = hfs.exists(
           new org.apache.hadoop.fs.Path(s"$wd/$name", "_SUCCESS"))
         // `k_$r` is the layout the former r-round loop left behind as
@@ -1462,32 +1439,13 @@ object KnnGraph {
     }
   }
 
-  /** Spark SQL's double comparison, replayed driver-side —
-    * `nanSafeCompareDoubles`: NaN is GREATEST (and equal to itself),
-    * and -0.0 == 0.0. Java's `Double.compare` agrees on NaN but orders
-    * -0.0 < 0.0, and Java's primitive `<=` makes EVERY NaN comparison
-    * false — both diverge from the relational operators the local
-    * replays below stand in for (r17 advice: a zero vector's NaN
-    * cosine then survived the cover test it should fail, and ±0.0
-    * ties broke by sign instead of falling through to the id
-    * tie-break). Every local twin of a Spark sort or BinaryComparison
-    * must route through THIS. */
-  private[graft] def nanSafeCompare(x: Double, y: Double): Int = {
-    val xN = java.lang.Double.isNaN(x)
-    val yN = java.lang.Double.isNaN(y)
-    if ((xN && yN) || (x == y)) 0
-    else if (xN) 1
-    else if (yN) -1
-    else if (x > y) 1 else -1
-  }
-
   /** The one-pass grouped greedy both [[robustPrune]] paths run: shuffle
     * the vector-attached candidate rows once by src, then replay
     * Vamana's sequential pick-and-cover locally per node. Sort order
-    * ((cos DESC, then nbr ASC) under [[nanSafeCompare]] — NaN greatest,
-    * -0.0 == 0.0, Spark's own double ordering) and the α-cover
-    * arithmetic ([[cosineLocal]], the native expression's bit-exact
-    * twin, compared with [[nanSafeCompare]] like Spark's `<=`) are
+    * ([[TopK.before]] — NaN greatest, -0.0 == 0.0, Spark's own double
+    * ordering) and the α-cover arithmetic ([[TopK.cosineLocal]], the
+    * native expression's bit-exact twin, compared with
+    * [[TopK.nanSafeCompare]] like Spark's `<=`) are
     * EXACTLY the relational rounds' — GraphPruneSpec pins edge-set
     * equality against the driver-side reference replay, including the
     * zero-vector (NaN cosine) and ±0.0-score cases. */
@@ -1502,9 +1460,7 @@ object KnnGraph {
         val sorted = it.map { case (_, nbr, cos, cv) =>
           (nbr, cos, cv.toArray) }.toArray
           .sortWith { case ((na, ca, _), (nb, cb, _)) =>
-            val c = nanSafeCompare(cb, ca)
-            c < 0 || (c == 0 && na < nb)
-          }
+            TopK.before((na, ca), (nb, cb)) }
         val kept = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Double, Array[Double])]
         var i = 0
@@ -1517,8 +1473,8 @@ object KnnGraph {
             // under Spark's `<=` (nanSafeCompare): a NaN-scored candidate
             // (zero vector — RHS NaN, the greatest value) is covered by
             // the FIRST pick, exactly as the relational filter pruned it
-            if (nanSafeCompare(
-                alpha * (1.0 - cosineLocal(kept(j)._3, cv)), 1.0 - cos) <= 0)
+            if (TopK.nanSafeCompare(
+                alpha * (1.0 - TopK.cosineLocal(kept(j)._3, cv)), 1.0 - cos) <= 0)
               covered = true
             j += 1
           }
@@ -1551,9 +1507,8 @@ object KnnGraph {
   private def writeBucketMeta(spark: SparkSession, path: String,
       n: Int): Unit = {
     val p = new org.apache.hadoop.fs.Path(path, "_graft_buckets")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(p, true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+    writeSmall(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      n.toString)
   }
 
   /** THE driver-side bucket function — Math.floorMod, the arithmetic
@@ -1583,12 +1538,7 @@ object KnnGraph {
   def bucketsOf(spark: SparkSession, path: String): Int = {
     val p = new org.apache.hadoop.fs.Path(path, "_graft_buckets")
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) NumBuckets
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
-    }
+    if (!f.exists(p)) NumBuckets else readSmall(f, p).toInt
   }
 
   /** Persist the UNDIRECTED adjacency of a built graph, partitioned by
@@ -1599,17 +1549,15 @@ object KnnGraph {
   def writeStore(graph: DataFrame, path: String,
       numBuckets: Int = AutoBuckets): Unit = {
     import graph.sparkSession.implicits._
-    val closure = graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
+    val closure = undirected(graph)
     // auto-sizing reads the frame once for (n, width) and the write
     // reads it again — checkpoint the INDEX-sized (≤2·k·n rows)
     // closure so the caller's lineage and the union+distinct shuffle
     // run exactly once under the default policy (a pinned count skips
     // the sizing job, so there's nothing to share)
-    val undirected =
-      if (numBuckets > 0) closure else closure.localCheckpoint(true)
-    val nb = resolveBuckets(undirected, numBuckets)
-    undirected
+    val und = if (numBuckets > 0) closure else closure.localCheckpoint(true)
+    val nb = resolveBuckets(und, numBuckets)
+    und
       .withColumn("bucket", pmod($"src", lit(nb.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
     writeBucketMeta(graph.sparkSession, path, nb)
@@ -1851,8 +1799,7 @@ object KnnGraph {
     import graph.sparkSession.implicits._
     val assign = vecs.select($"vec_id",
       clusterOf($"v", centroids).as("cb"))
-    graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
+    undirected(graph)
       .join(assign.select($"vec_id".as("nbr"), $"cb".as("nbr_bucket")), Seq("nbr"))
       .join(assign.select($"vec_id".as("src"), $"cb".as("bucket")), Seq("src"))
       .select($"src", $"nbr", $"nbr_bucket", $"bucket")
@@ -2280,24 +2227,13 @@ object KnnGraph {
     * (qid, node) frame of graph nodes) for a warm start. */
   def serveStored(spark: SparkSession, path: String, vecs: DataFrame,
       queries: DataFrame, k: Int, beamRounds: Int,
-      entries: Option[DataFrame] = None): DataFrame =
-    rankPool(vecs, queries,
-      serveStoredTrace(spark, path, vecs, queries, k, beamRounds, entries)
-        .last._2, k)
-
-  /** The visited pool's exact-cosine top-`keep` per query — scoring is
-    * an inner join against the corpus, so a node whose VECTOR has been
-    * erased can never be answered even from a stale pool. */
-  private[graft] def rankPool(vecs: DataFrame, queries: DataFrame,
-      pool: DataFrame, keep: Int): DataFrame = {
-    import vecs.sparkSession.implicits._
-    pool
-      .filter($"node" =!= $"qid")
-      .join(broadcast(queries), Seq("qid"))
-      .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= keep).select($"qid", $"node")
+      entries: Option[DataFrame] = None): DataFrame = {
+    val pool = serveStoredTrace(spark, path, vecs, queries, k, beamRounds,
+      entries).last._2
+    // scoring inner-joins the corpus: a node whose VECTOR has been
+    // erased is never answered, even from a stale pool
+    TopK.exact(pool.filter(col("node") =!= col("qid")), broadcast(queries),
+      vecs, k)
   }
 
   /** Persist the corpus VECTORS bucket-partitioned by `vec_id` — the
@@ -2643,16 +2579,27 @@ object KnnGraph {
   /** [[fetchVectors]] over an already-resolved store relation (see
     * [[expandClusteredFrom]] — one resolution per request batch). */
   private def fetchVectorsFrom(store: DataFrame, numBuckets: Int,
-      ids: DataFrame): DataFrame = {
+      ids: DataFrame): DataFrame =
+    fetchFrom(store, numBuckets, ids, Seq("vec_id", "v"))
+
+  /** THE pruned point-read every store fetch shares: the ids' bucket
+    * list prunes partitions, the pushed `vec_id IN (…)` filter skips
+    * row groups inside them. `ids` is serving-bounded. */
+  private def pointRead(store: DataFrame, numBuckets: Int,
+      ids: Seq[Long]): DataFrame =
+    store.filter(col("bucket").isin(ids.map(bucketOf(_, numBuckets)).distinct: _*) &&
+      col("vec_id").isin(ids: _*))
+
+  /** [[pointRead]] of a bounded frame's distinct `node` ids (one driver
+    * collect), projected to `cols` and deduped: streamed appends are
+    * retry-safe at the ANSWER level — a replayed micro-batch may leave
+    * duplicate physical rows, and without the dedup one node could
+    * occupy several top-k slots. */
+  private def fetchFrom(store: DataFrame, numBuckets: Int, ids: DataFrame,
+      cols: Seq[String]): DataFrame = {
     import store.sparkSession.implicits._
-    val idList = ids.select($"node").distinct().as[Long].collect()
-    val buckets = idList.map(bucketOf(_, numBuckets)).distinct.toSeq
-    // distinct: streamed appends are retry-safe at the ANSWER level —
-    // a replayed micro-batch may leave duplicate physical rows, and
-    // without the dedup one node could occupy several top-k slots
-    store
-      .filter($"bucket".isin(buckets: _*) && $"vec_id".isin(idList.toSeq: _*))
-      .select($"vec_id", $"v").distinct()
+    val idList = ids.select($"node").distinct().as[Long].collect().toSeq
+    pointRead(store, numBuckets, idList).select(cols.map(col): _*).distinct()
   }
 
   /** Beam-search serve where BOTH sides are stores: edges from the
@@ -2692,14 +2639,8 @@ object KnnGraph {
     // within a serve), shared by every round's fetch
     val vecRel = readStore(spark, vecPath)
     val vecNb = bucketsOf(spark, vecPath)
-    val keepCols = (Seq("qid", "node") ++ carry).map(col)
-    def scoreKeep(cand: DataFrame, keep: Int) = cand
-      .join(broadcast(queries), Seq("qid"))
-      .join(fetchVectorsFrom(vecRel, vecNb, cand)
-        .select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= keep).select(keepCols: _*)
+    def scoreKeep(cand: DataFrame, keep: Int) = TopK.exact(cand,
+      broadcast(queries), fetchVectorsFrom(vecRel, vecNb, cand), keep, carry)
     val pool = beamTrace(
       entries.getOrElse(ringEntries(vecRel, queries)),
       expand,
@@ -2745,15 +2686,9 @@ object KnnGraph {
   /** [[fetchCodes]] over an already-resolved store relation (see
     * [[expandClusteredFrom]] — one resolution per request batch). */
   private def fetchCodesFrom(store: DataFrame, numBuckets: Int,
-      ids: DataFrame): DataFrame = {
-    import store.sparkSession.implicits._
-    val idList = ids.select($"node").distinct().as[Long].collect()
-    val buckets = idList.map(bucketOf(_, numBuckets)).distinct.toSeq
-    store
-      .filter($"bucket".isin(buckets: _*) && $"vec_id".isin(idList.toSeq: _*))
-      .drop("bucket").distinct()
+      ids: DataFrame): DataFrame =
+    fetchFrom(store, numBuckets, ids, store.columns.filterNot(_ == "bucket").toSeq)
       .withColumnRenamed("vec_id", "node")
-  }
 
   /** PQ-GUIDED stored serving — sq24's algorithm lifted onto the
     * stored layout: every beam round ranks fresh candidates by ADC
@@ -2806,8 +2741,6 @@ object KnnGraph {
       expand: DataFrame => DataFrame, carry: Seq[String],
       rerankWidth: Int = 0, beamWidth: Int = 0): DataFrame = {
     import spark.implicits._
-    val m = cb.length
-    val sub = cb.head.head.length
     // one relation resolution per request batch (stores are immutable
     // within a serve): every round's code fetch and the final vector
     // re-rank run from these
@@ -2815,22 +2748,12 @@ object KnnGraph {
     val codesNb = bucketsOf(spark, codesPath)
     val vecRel = readStore(spark, vecPath)
     val vecNb = bucketsOf(spark, vecPath)
-    val qluts = (0 until m).foldLeft(queries.toDF()) { (df, mi) =>
-      df.withColumn(s"lut$mi", Pq.lutCol($"v", cb, sub, mi))
-    }.drop("v")
-    val adc = (0 until m).map(mi =>
-      element_at(col(s"lut$mi"), col(s"c$mi") + 1)).reduce(_ + _)
+    val qluts = Pq.queryLuts(queries, cb, cb.head.head.length)
     // `carry` columns ride through the keep unchanged — the clustered
     // walk needs each kept candidate's bucket (the edge that discovered
     // a node names where its adjacency lives)
-    val keepCols = (Seq("qid", "node") ++ carry).map(col)
-    def adcKeep(cand: DataFrame, keep: Int) = cand
-      .join(broadcast(qluts), Seq("qid"))
-      .join(fetchCodesFrom(codesRel, codesNb, cand), Seq("node"))
-      .withColumn("adist", adc)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
-      .filter($"rn" <= keep).select(keepCols: _*)
+    def adcKeep(cand: DataFrame, keep: Int) = TopK.adc(cand,
+      broadcast(qluts), fetchCodesFrom(codesRel, codesNb, cand), keep, carry)
     // `beamWidth` (DiskANN's L) widens the per-round ADC keep past k:
     // the pool a query can ever re-rank is ≈ entries + rounds·L rows,
     // so past the shortlist knob the WALK's coverage is the other
@@ -2868,13 +2791,8 @@ object KnnGraph {
       .distinct().localCheckpoint(true)
     // the loop's ONLY full-precision reads: ≤ max(2k, W) + entry rows
     // of vectors per query
-    shortlist
-      .join(broadcast(queries), Seq("qid"))
-      .join(fetchVectorsFrom(vecRel, vecNb, shortlist)
-        .select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= k).select($"qid", $"node")
+    TopK.exact(shortlist, broadcast(queries),
+      fetchVectorsFrom(vecRel, vecNb, shortlist), k)
   }
 
   /** The COMPOSED production serving head (sq28 — the DiskANN/Vamana
@@ -2906,28 +2824,6 @@ object KnnGraph {
       rerankWidth = rerankWidth, beamWidth = beamWidth)
   }
 
-  /** Driver-side replica of [[graft.functions.CosineSimilarity]]'s
-    * arithmetic — same accumulation order, same final division, so the
-    * coordinated loop's tie-breaks are bit-identical to the
-    * distributed one's. */
-  private[graft] def cosineLocal(x: Array[Double], y: Array[Double]): Double = {
-    val n = math.min(x.length, y.length)
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i); i += 1
-    }
-    dot / math.sqrt(nx * ny)
-  }
-
-  /** Spark's descending double ordering (NaN greatest → first under
-    * DESC), then ascending node — the row_number tie-break both
-    * distributed loops use. */
-  private def keepTopK(cands: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
-    cands.sortWith { case ((na, ca), (nb, cb)) =>
-      val c = java.lang.Double.compare(cb, ca)
-      c < 0 || (c == 0 && na < nb)
-    }.take(k)
-
   /** LOW-LATENCY serving head: the beam state (≤ |Q|·(1+rounds·k)
     * (node, cos) rows) lives on the COORDINATOR; the cluster serves
     * only two pruned point-reads per round — frontier adjacency from
@@ -2938,9 +2834,11 @@ object KnnGraph {
     * sq14's batched stored-index serving, and the shape an online
     * serving endpoint runs (coordinator holds beams, storage nodes
     * answer pruned gets). Answers are EXACTLY [[serveFromStores]]'s:
-    * same entries, same candidate sets, and [[cosineLocal]] replays
-    * the native expression's arithmetic bit for bit (StoredGraphSpec
-    * asserts equality). For |Q| in the thousands the per-round state
+    * same entries, same candidate sets, [[TopK.cosineLocal]] replays
+    * the native expression's arithmetic bit for bit, and every keep is
+    * [[TopK.local]] — the window order, ±0.0 and NaN included
+    * (StoredGraphSpec asserts equality, exact ties included). For |Q|
+    * in the thousands the per-round state
     * outgrows a coordinator — use [[serveFromStores]] there; the
     * boundedness contract HERE is the request batch. MEASURED
     * (COVERAGE.md "Serving-head crossover probe", same stores,
@@ -2971,8 +2869,8 @@ object KnnGraph {
       // (StoredGraphSpec's sparse-id test pins the fixed behavior).
       val reps = hashEntries(spark, vecPath)
       queries.map { case (qid, qvec) =>
-        qid -> reps.maxBy { case (node, cv) =>
-          (cosineLocal(qvec, cv), -node) }._1
+        qid -> TopK.local(reps.map { case (node, cv) =>
+          node -> TopK.cosineLocal(qvec, cv) }, 1).head._1
       }.toMap
     }
     // one relation resolution per request batch for each store; every
@@ -2982,13 +2880,9 @@ object KnnGraph {
     val adjRel = readStore(spark, graphPath)
     def fetchVecs(ids: Set[Long]): Map[Long, Array[Double]] =
       if (ids.isEmpty) Map.empty
-      else {
-        val bs = ids.map(bucketOf(_, vecNb)).toSeq
-        vecRel
-          .filter($"bucket".isin(bs: _*) && $"vec_id".isin(ids.toSeq: _*))
-          .select($"vec_id", $"v").as[(Long, Seq[Double])]
-          .collect().map { case (id, v) => id -> v.toArray }.toMap
-      }
+      else pointRead(vecRel, vecNb, ids.toSeq)
+        .select($"vec_id", $"v").as[(Long, Seq[Double])]
+        .collect().map { case (id, v) => id -> v.toArray }.toMap
     val qv = queries.toMap
     // visited = the distributed loop's pool frame (dedup semantics);
     // scores = what the final scoring join would see — a visited node
@@ -3000,7 +2894,7 @@ object KnnGraph {
     val scores = scala.collection.mutable.Map(queries.map { case (qid, _) =>
       val e = entry(qid)
       qid -> scala.collection.mutable.LinkedHashMap(
-        entryVecs.get(e).map(v => e -> cosineLocal(qv(qid), v)).toSeq: _*)
+        entryVecs.get(e).map(v => e -> TopK.cosineLocal(qv(qid), v)).toSeq: _*)
     }: _*)
     var frontier: Map[Long, Seq[Long]] =
       queries.map { case (qid, _) => qid -> Seq(entry(qid)) }.toMap
@@ -3019,15 +2913,15 @@ object KnnGraph {
       // pruned vector point-read: the round's other job
       val vecs = fetchVecs(cands.valuesIterator.flatten.toSet)
       frontier = cands.map { case (qid, cs) =>
-        val kept = keepTopK(
-          cs.flatMap(c => vecs.get(c).map(v => c -> cosineLocal(qv(qid), v))), k)
+        val kept = TopK.local(
+          cs.flatMap(c => vecs.get(c).map(v => c -> TopK.cosineLocal(qv(qid), v))), k)
         kept.foreach { case (node, cos) =>
           visited(qid) += node; scores(qid)(node) = cos }
         qid -> kept.map(_._1)
       }
     }
     queries.flatMap { case (qid, _) =>
-      keepTopK(scores(qid).toSeq.filterNot(_._1 == qid), k)
+      TopK.local(scores(qid).toSeq.filterNot(_._1 == qid), k)
         .map { case (node, _) => qid -> node }
     }
   }
@@ -3043,18 +2937,12 @@ object KnnGraph {
   def serveStoredTrace(spark: SparkSession, path: String, vecs: DataFrame,
       queries: DataFrame, k: Int, beamRounds: Int,
       entries: Option[DataFrame] = None): Seq[(Int, DataFrame)] = {
-    import spark.implicits._
     val adjRel = readStore(spark, path)
     val adjNb = bucketsOf(spark, path)
     beamTrace(
       entries.getOrElse(ringEntries(vecs, queries)),
       expandStoredFrom(adjRel, adjNb, _),
-      fresh => fresh
-        .join(broadcast(queries), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node"),
+      TopK.exact(_, broadcast(queries), vecs, k),
       beamRounds)
   }
 

@@ -129,6 +129,20 @@ object Pq {
   def lutCol(v: Column, cb: Seq[Seq[Seq[Double]]], sub: Int, mi: Int): Column =
     transform(typedlit(cb(mi)), c => sqd(slice(v, mi * sub + 1, sub), c))
 
+  /** Per-query LUTs: `queries` (qid, v) → (qid, lut0…lut{M-1}), one
+    * [[lutCol]] per subspace — the query side of every ADC rank. */
+  def queryLuts(queries: DataFrame, cb: Seq[Seq[Seq[Double]]],
+      sub: Int): DataFrame =
+    cb.indices.foldLeft(queries.toDF()) { (df, mi) =>
+      df.withColumn(s"lut$mi", lutCol(col("v"), cb, sub, mi))
+    }.drop("v")
+
+  /** The ADC distance of a row holding LUTs `lut0…` and codes `c0…`:
+    * Σ_mi lut_mi[c_mi], added in mi order (the oracles replay the same
+    * order) — M lookups, no vector arithmetic. */
+  def adcCol(m: Int): Column =
+    (0 until m).map(mi => element_at(col(s"lut$mi"), col(s"c$mi") + 1)).reduce(_ + _)
+
   /** Flat-PQ encode (no coarse stage): `vec_id` + one 4-bit code per
     * subspace as columns `c0..c{M-1}` — argmin via
     * array_position(d, array_min(d)), first-index-wins like the

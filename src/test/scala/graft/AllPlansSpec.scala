@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Blanket physical-plan invariant over EVERY registered query: nothing
@@ -15,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcasts and plans as BroadcastNestedLoopJoin anyway, so the
   * allowlist is empty — keep it that way.
   */
-class AllPlansSpec extends AnyFunSuite {
+class AllPlansSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -27,12 +32,36 @@ class AllPlansSpec extends AnyFunSuite {
     * plan is fixed right after its build: a later query may unpersist a
     * frame this one caches, and a plan made after that would expand the
     * cached lineage it never re-executes. */
-  private lazy val plans: Seq[(String, QueryExecution)] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+  private lazy val built: Seq[(String, QueryExecution, Seq[Executed])] = {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = ran.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val qe = fn(spark, dir).queryExecution
       qe.executedPlan
-      name -> qe
-    }
+      // every plan this build executed lands under its name
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val executed = Iterator.continually(ran.poll()).takeWhile(_ != null)
+        .map(e => executedFacts(e.executedPlan)).toSeq
+      (name, qe, executed)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The invariant facts of a plan the build EXECUTED, read off its
+    * final (adaptive) physical tree — reused exchanges are not
+    * descended, so a scan counts once per execution. Reduced on the
+    * spot: holding thousands of executed QueryExecutions would pin
+    * their checkpointed RDDs for the whole pass. */
+  private case class Executed(cartesian: Boolean, scans: Int, globalWindows: Int)
+  private def executedFacts(plan: SparkPlan): Executed = Executed(
+    collect(plan) { case c: CartesianProductExec => c }.nonEmpty,
+    collect(plan) { case f: FileSourceScanExec => f }.size,
+    collect(plan) { case w: WindowExec if w.partitionSpec.isEmpty => w }.size)
 
   /** A frame consumed N times re-executes N times (no cross-branch CSE),
     * so runaway scan counts are the recompute-explosion smell. Current
@@ -44,18 +73,29 @@ class AllPlansSpec extends AnyFunSuite {
   private val maxScans = 13
   private val allowManyScans: Set[String] = Set("dq09_dup_clusters")
 
+  /** Both checks also read every plan a build EXECUTED: the eager rows
+    * (checkpoints, collects, counts and writes inside a query's
+    * construction — sq22b, sq23, sq27, sq28 among them) do their
+    * ranking and joining there, and their small final plan alone would
+    * hide it. */
   test("no registered query plans a CartesianProduct or a scan explosion") {
     val scanNode = "\\(\\d+\\) Scan parquet".r
-    val offenders = plans.flatMap {
-      case (name, qe) =>
+    val offenders = built.flatMap {
+      case (name, qe, executed) =>
         val plan = qe.explainString(ExplainMode.fromString("formatted"))
-        val cartesian = !allowCartesian(name) && plan.contains("CartesianProduct")
-        val scans = scanNode.findAllIn(plan).size
-        val explosion = !allowManyScans(name) && scans > maxScans
-        if (cartesian) Some(s"$name (CartesianProduct)")
-        else if (explosion) Some(s"$name ($scans scans)")
-        else None
+        val facts = Executed(plan.contains("CartesianProduct"),
+          scanNode.findAllIn(plan).size, 0)
+        ((name -> facts) +: executed.zipWithIndex.map { case (e, i) =>
+          s"$name (executed #$i)" -> e }).flatMap { case (at, e) =>
+          if (!allowCartesian(name) && e.cartesian) Some(s"$at (CartesianProduct)")
+          else if (!allowManyScans(name) && e.scans > maxScans)
+            Some(s"$at (${e.scans} scans)")
+          else None
+        }
     }
+    val captured = built.map(_._3.size)
+    info(s"${captured.sum} executed plans from ${captured.count(_ > 0)} queries")
+    assert(captured.sum > 0, "no executed plan was captured")
     assert(offenders.isEmpty,
       s"queries with degenerate plans: ${offenders.mkString(", ")}")
   }
@@ -86,15 +126,16 @@ class AllPlansSpec extends AnyFunSuite {
     "tq18_vocab_growth", "pq06_bpe_shard_packing")
 
   test("no registered query plans an unpartitioned Window over data-sized input") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val offenders = plans.flatMap {
-      case (name, qe) if !allowGlobalWindow(name) =>
-        val plan = qe.sparkPlan
-        val global = plan.collect {
+    val offenders = built.flatMap {
+      case (name, qe, executed) if !allowGlobalWindow(name) =>
+        val global = qe.sparkPlan.collect {
           case w: WindowExec if w.partitionSpec.isEmpty => w
+        }.size
+        ((name -> global) +: executed.zipWithIndex.map { case (e, i) =>
+          s"$name (executed #$i)" -> e.globalWindows }).collect {
+          case (at, n) if n > 0 => s"$at ($n global Window)"
         }
-        if (global.nonEmpty) Some(s"$name (${global.size} global Window)") else None
-      case _ => None
+      case _ => Nil
     }
     assert(offenders.isEmpty,
       s"queries with unpartitioned windows: ${offenders.mkString(", ")}")

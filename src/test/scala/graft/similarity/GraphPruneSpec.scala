@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * first element is the greedy top-1; with α → ∞ the prune condition
   * can never fire, so the result IS the plain top-R truncation (the
   * algebraic pin that the two sq26 arms differ only by the α rule);
-  * and the whole greedy replays driver-side with [[KnnGraph
+  * and the whole greedy replays driver-side with [[TopK
   * .cosineLocal]]'s bit-identical arithmetic — edge-set equality, the
   * StoredPqServeSpec discipline. */
 class GraphPruneSpec extends AnyFunSuite {
@@ -110,7 +110,7 @@ class GraphPruneSpec extends AnyFunSuite {
       .groupBy(_._1).toSeq.flatMap { case (src, rows) =>
         var remaining = rows.map { case (_, nbr, cos) => (nbr, cos) }
           .sortWith { case ((na, ca), (nb, cb)) =>
-            val c = KnnGraph.nanSafeCompare(cb, ca)
+            val c = TopK.nanSafeCompare(cb, ca)
             c < 0 || (c == 0 && na < nb)
           }.toList
         val kept = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -118,8 +118,8 @@ class GraphPruneSpec extends AnyFunSuite {
           val (pick, _) = remaining.head
           kept += pick
           remaining = remaining.tail.filterNot { case (c, cos) =>
-            KnnGraph.nanSafeCompare(
-              Alpha * (1.0 - KnnGraph.cosineLocal(vLocal(pick), vLocal(c))),
+            TopK.nanSafeCompare(
+              Alpha * (1.0 - TopK.cosineLocal(vLocal(pick), vLocal(c))),
               1.0 - cos) <= 0
           }
         }

@@ -43,7 +43,7 @@ class SearchCandidatesSpec extends AnyFunSuite {
     // 3. scored with the shared exact cosine (spot-check one row)
     val row = cand.head()
     val vOf = vecs.as[(Long, Seq[Double])].collect().toMap
-    val expect = KnnGraph.cosineLocal(
+    val expect = TopK.cosineLocal(
       vOf(row.getLong(0)).toArray, vOf(row.getLong(1)).toArray)
     assert(row.getDouble(2) == expect, "cos column is not the exact cosine")
     // 4. deterministic end to end (ring entries, deterministic keeps):

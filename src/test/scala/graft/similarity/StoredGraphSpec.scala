@@ -106,6 +106,39 @@ class StoredGraphSpec extends AnyFunSuite {
       entries = Some(ringMap)).toSet
     assert(viaCoordinator == viaCorpus,
       "coordinated serving diverged from the distributed loop")
+    // exact ties: the second half of this corpus duplicates the first
+    // half's vectors (each pair scores bit-identically against any
+    // query), and a zero-vector query scores NaN against everything —
+    // every keep falls through to the id tie-break, which all three
+    // heads must apply identically
+    val half = n / 2
+    val tied = vecs.filter($"vec_id" < half)
+      .union(vecs.filter($"vec_id" < n - half)
+        .select(($"vec_id" + half).as("vec_id"), $"v"))
+      .localCheckpoint(true)
+    val tiedGraph = KnnGraph.build(tied, K, rounds = 2).last
+    KnnGraph.writeStore(tiedGraph, s"$root/tg")
+    KnnGraph.writeVectors(tied, s"$root/tvec")
+    val dim = qLocal.head._2.length
+    val tq = tied.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"v")
+      .union(Seq((10000L, Seq.fill(dim)(0.0))).toDF("qid", "v"))
+    val tqLocal = tq.as[(Long, Seq[Double])].collect()
+      .map { case (qid, v) => qid -> v.toArray }.toSeq
+    val tRing = tqLocal.map { case (qid, _) =>
+      qid -> Math.floorMod(qid * 37 + 1, n) }.toMap
+    val tiedCorpus = KnnGraph.serveStored(
+      spark, s"$root/tg", tied, tq, K, beamRounds = 3)
+      .as[(Long, Long)].collect().toSet
+    assert(tiedCorpus.count(_._1 == 10000L) == K,
+      "the zero-vector query must still be answered")
+    assert(KnnGraph.serveFromStores(
+      spark, s"$root/tg", s"$root/tvec", tq, K, beamRounds = 3)
+      .as[(Long, Long)].collect().toSet == tiedCorpus,
+      "store-only serving diverged on exact ties")
+    assert(KnnGraph.serveCoordinated(
+      spark, s"$root/tg", s"$root/tvec", tqLocal, K, beamRounds = 3,
+      entries = Some(tRing)).toSet == tiedCorpus,
+      "coordinated serving diverged on exact ties")
     vecs.unpersist()
   }
 
@@ -315,8 +348,8 @@ class StoredGraphSpec extends AnyFunSuite {
     // nodes, and the distributed loop entered there must answer the same
     val reps = KnnGraph.hashEntries(spark, s"$root/vec")
     val manualPicks = qLocal.map { case (qid, qvec) =>
-      qid -> reps.maxBy { case (node, cv) =>
-        (KnnGraph.cosineLocal(qvec, cv), -node) }._1
+      qid -> TopK.local(reps.map { case (node, cv) =>
+        node -> TopK.cosineLocal(qvec, cv) }, 1).head._1
     }.toMap
     val entryFrame = KnnGraph.sidecarEntries(spark, s"$root/vec", queries)
     assert(entryFrame.as[(Long, Long)].collect().toMap == manualPicks,

@@ -112,7 +112,7 @@ class StoredPqServeSpec extends AnyFunSuite {
         codeLocal.get(c).map(code => c -> adist(q, code))), 2 * K).map(_._1) ++
         Seq(entry).filter(_ != qid)).distinct
       shortlist.flatMap(c => vLocal.get(c)
-          .map(cv => c -> KnnGraph.cosineLocal(q, cv)))
+          .map(cv => c -> TopK.cosineLocal(q, cv)))
         .sortWith { case ((na, ca), (nb, cbs)) =>
           val cmp = java.lang.Double.compare(cbs, ca)
           cmp < 0 || (cmp == 0 && na < nb)
